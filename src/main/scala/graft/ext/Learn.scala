@@ -285,15 +285,19 @@ object Learn {
   // per-iteration one treeAggregate of per-row gradients, then a driver
   // weight update — exactly the relational shape below) -----------------
 
-  /** Micro-probability of the positive class under quantized weights —
-    * the sigmoid formula string, shared VERBATIM between the Spark plan
-    * and the oracle (both engines parse the identical text; `exp` is the
-    * one libm call, and the 1e-6 quantization makes a last-ulp engine
-    * difference visible only within ~1e-10 of a rounding boundary — the
-    * s15 micro-nat ln precedent). Expects (w0q, w1q, w2q) quantized
-    * 2^16-unit weights and BIGINT features (x1, x2) in scope. */
-  val lrProbExpr: String =
-    "CAST(round(1000000.0 / (1.0 + exp(-(CAST(((w0q + (w1q * x1)) + (w2q * x2)) AS DOUBLE) / 65536.0)))) AS BIGINT)"
+  /** Micro-probability of the positive class under d quantized weights —
+    * the sigmoid formula string over the fold-left margin
+    * `((w0q + (w1q * x1)) + (w2q * x2)) …`, shared VERBATIM between the
+    * Spark plan and the oracle (both engines parse the identical text;
+    * `exp` is the one libm call, and the 1e-6 quantization makes a
+    * last-ulp engine difference visible only within ~1e-10 of a rounding
+    * boundary — the s15 micro-nat ln precedent). Expects (w0q..wdq)
+    * quantized 2^16-unit weights and BIGINT features (x1..xd) in scope. */
+  def lrProbExprK(d: Int): String = {
+    val margin = (1 to d).map(i => s"(w${i}q * x$i)")
+      .foldLeft("w0q")((a, t) => s"($a + $t)")
+    s"CAST(round(1000000.0 / (1.0 + exp(-(CAST($margin AS DOUBLE) / 65536.0)))) AS BIGINT)"
+  }
 
   /** One weight's gradient-ascent update in quantized units — the mean
     * gradient (exact micro-integer sum / n) scaled by the constant step,
@@ -301,63 +305,64 @@ object Learn {
   def lrUpdExpr(wq: String, g: String, lr: Double): String =
     s"$wq + CAST(round(($lr * ((CAST($g AS DOUBLE) / 1000000.0) / n)) * 65536.0) AS BIGINT)"
 
-  /** Binary logistic regression, y ~ sigmoid(w0 + w1·x1 + w2·x2), trained
-    * by `iters` FULL-BATCH gradient-ascent iterations on the log
-    * likelihood over a (x1, x2, yq) table (yq the micro-scaled 0/1e6
-    * label). Per iteration: ONE scan of the persisted feature table
-    * computing three exact-integer gradient sums (micro-unit errors times
-    * integer features — map-side combined, bit-identical under any
-    * partitioning), then a 1-row update projection; the weight row is
-    * localCheckpointed so plan depth stays constant (the pregel
-    * discipline). This is GradientDescent.scala's runMiniBatchSGD at
-    * miniBatchFraction = 1.0 re-expressed relationally.
-    *
-    * Deliberate deviations, per the [[Recommend.als]] rationale: weights
-    * quantized to 2^16 units after every update (all cross-partition sums
-    * are exact integers; the one double expression per update has fixed
-    * parenthesization, so DuckDB reproduces every weight bit-for-bit),
-    * and a CONSTANT step instead of the reference's stepSize/sqrt(t)
-    * decay — one fewer engine-shared libm term per iteration, and at
-    * full-batch (no stochastic noise to anneal) the decay buys nothing.
-    *
-    * Returns the 1-row (w0q, w1q, w2q). */
-  /** The zero-weight starting row. */
-  def logisticInit(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.range(1).selectExpr("CAST(0 AS BIGINT) AS w0q",
-      "CAST(0 AS BIGINT) AS w1q", "CAST(0 AS BIGINT) AS w2q")
+  /** The zero-weight starting row (w0q..wdq). */
+  def logisticInitK(spark: org.apache.spark.sql.SparkSession, d: Int): DataFrame =
+    spark.range(1).selectExpr(
+      (0 to d).map(i => s"CAST(0 AS BIGINT) AS w${i}q"): _*)
 
-  /** ONE full-gradient step over `feats` from the 1-row `w`: the shared
-    * unit of [[logisticFit2]]'s batch loop and the streaming variant's
-    * per-micro-batch update (reference mllib/classification/
-    * StreamingLogisticRegressionWithSGD.scala:89 — trainOn re-runs
-    * algorithm.run per batch, i.e. a FULL GradientDescent loop of
-    * numIterations (default 50) seeded from the carried model; v12's
-    * one-step-per-batch form is a deliberate thin-slice deviation —
+  /** ONE full-gradient step over (x1..xd, yq) `feats` from the 1-row `w`:
+    * the shared unit of [[logisticFitK]]'s batch loop, the minibatch
+    * loop and the streaming variant's per-micro-batch update (reference
+    * mllib/classification/StreamingLogisticRegressionWithSGD.scala:89 —
+    * trainOn re-runs algorithm.run per batch, i.e. a FULL GradientDescent
+    * loop of numIterations (default 50) seeded from the carried model;
+    * v12's one-step-per-batch form is a deliberate thin-slice deviation —
     * one oracle-gated update per batch — declared the same way as the
     * other deviations in this file). */
-  def logisticStep(feats: DataFrame, w: DataFrame, lr: Double): DataFrame = {
+  def logisticStepK(feats: DataFrame, w: DataFrame, d: Int, lr: Double): DataFrame = {
     // r21: the weight row rides THROUGH the gradient aggregate (max of a
     // broadcast constant = the constant — exact BIGINTs) instead of
     // re-joining `w` after it, so the step references `w` exactly once.
     // Single-reference is what makes the lazy-checkpoint chain in
-    // [[logisticFit2]] safe: a second reference would race to
+    // [[logisticFitK]] safe: a second reference would race to
     // materialize the same lazy frame inside one job (the d18 pattern).
     feats.crossJoin(broadcast(w))
-      .selectExpr(s"$lrProbExpr AS pq", "yq", "x1", "x2",
-        "w0q", "w1q", "w2q")
+      .selectExpr(Seq(s"${lrProbExprK(d)} AS pq", "yq") ++
+        (1 to d).map(i => s"x$i") ++ (0 to d).map(i => s"w${i}q"): _*)
       .agg(count(lit(1)).as("n"),
-        sum(col("yq") - col("pq")).as("g0"),
-        sum((col("yq") - col("pq")) * col("x1")).as("g1"),
-        sum((col("yq") - col("pq")) * col("x2")).as("g2"),
-        max("w0q").as("w0q"), max("w1q").as("w1q"), max("w2q").as("w2q"))
+        (sum(col("yq") - col("pq")).as("g0") +:
+          (1 to d).map(i => sum((col("yq") - col("pq")) * col(s"x$i")).as(s"g$i"))) ++
+          (0 to d).map(i => max(s"w${i}q").as(s"w${i}q")): _*)
       .selectExpr(
-        s"${lrUpdExpr("w0q", "g0", lr)} AS w0q",
-        s"${lrUpdExpr("w1q", "g1", lr)} AS w1q",
-        s"${lrUpdExpr("w2q", "g2", lr)} AS w2q")
+        (0 to d).map(i => s"${lrUpdExpr(s"w${i}q", s"g$i", lr)} AS w${i}q"): _*)
   }
 
-  def logisticFit2(feats: DataFrame, iters: Int = 8, lr: Double = 1.0,
-                   eagerLast: Boolean = true): DataFrame = {
+  /** d-feature binary logistic regression, y ~ sigmoid(w0 + Σ wi·xi)
+    * (reference ml/classification/LogisticRegression fits arbitrary-width
+    * vectors), trained by `iters` FULL-BATCH gradient-ascent iterations
+    * on the log likelihood over a (x1..xd, yq) table (yq the
+    * micro-scaled 0/1e6 label). Per iteration: ONE scan of the persisted
+    * feature table computing d + 1 exact-integer gradient sums
+    * (micro-unit errors times integer features — map-side combined,
+    * bit-identical under any partitioning), then a 1-row update
+    * projection; the weight row is localCheckpointed so plan depth stays
+    * constant (the pregel discipline). This is GradientDescent.scala's
+    * runMiniBatchSGD at miniBatchFraction = 1.0 re-expressed
+    * relationally.
+    *
+    * Deliberate deviations, per the [[Recommend.alsRank]] rationale:
+    * weights quantized to 2^16 units after every update (all
+    * cross-partition sums are exact integers; the one double expression
+    * per update has fixed parenthesization, so DuckDB reproduces every
+    * weight bit-for-bit), and a CONSTANT step instead of the reference's
+    * stepSize/sqrt(t) decay — one fewer engine-shared libm term per
+    * iteration, and at full-batch (no stochastic noise to anneal) the
+    * decay buys nothing.
+    *
+    * Returns the 1-row (w0q..wdq). */
+  def logisticFitK(feats: DataFrame, d: Int, iters: Int = 8,
+                   lr: Double = 1.0, eagerLast: Boolean = true): DataFrame = {
+    require(d >= 1 && d <= 16, s"logisticFitK: d = $d outside [1, 16]")
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // no eager count: iteration 1's gradient scan populates the cache.
     // r21: the iteration checkpoints are LAZY (each 1-row weight frame's
@@ -371,9 +376,9 @@ object Learn {
     // models-union action; the inner persist is released unmaterialized,
     // so the chain's scans re-derive the label projection from the
     // caller's eagerly-populated feature cache — a narrow in-memory map).
-    var w = logisticInit(f.sparkSession).localCheckpoint(false)
-    for (i <- 1 to iters)
-      w = logisticStep(f, w, lr).localCheckpoint(eagerLast && i == iters)
+    var w = logisticInitK(f.sparkSession, d).localCheckpoint(false)
+    for (t <- 1 to iters)
+      w = logisticStepK(f, w, d, lr).localCheckpoint(eagerLast && t == iters)
     f.unpersist()
     w
   }
@@ -395,22 +400,22 @@ object Learn {
       s" - (CAST($lambda AS DOUBLE) * (CAST($wq AS DOUBLE) / 65536.0)))) * 65536.0) AS BIGINT)"
   }
 
-  /** [[logisticFit2]] under the √t step decay + SquaredL2Updater —
-    * closes the constant-step / no-regularizer declared deviations the
-    * full-batch fits carry. Same scan shape; only the 1-row update
-    * projection changes per iteration. */
+  /** [[logisticFitK]] at d = 2 under the √t step decay +
+    * SquaredL2Updater — closes the constant-step / no-regularizer
+    * declared deviations the full-batch fits carry. Same scan shape; only
+    * the 1-row update projection changes per iteration. */
   def logisticFitDecayL2(feats: DataFrame, iters: Int = 8,
                          lr0: Double = 1.0,
                          lambda: Double = 0.001): DataFrame = {
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]] — the weight row rides
+    // r21: lazy-chained like [[logisticFitK]] — the weight row rides
     // through the gradient aggregate (single reference), iteration
     // checkpoints are lazy, only the last is eager; iteration 1's scan
     // populates the cache.
-    var w = logisticInit(f.sparkSession).localCheckpoint(false)
+    var w = logisticInitK(f.sparkSession, 2).localCheckpoint(false)
     for (t <- 1 to iters) {
       w = f.crossJoin(broadcast(w))
-        .selectExpr(s"$lrProbExpr AS pq", "yq", "x1", "x2",
+        .selectExpr(s"${lrProbExprK(2)} AS pq", "yq", "x1", "x2",
           "w0q", "w1q", "w2q")
         .agg(count(lit(1)).as("n"),
           sum(col("yq") - col("pq")).as("g0"),
@@ -437,76 +442,27 @@ object Learn {
     * ROTATING so `batches` consecutive iterations cover the corpus
     * (the seeded Bernoulli sample is exactly what the oracle gate
     * cannot allow). The per-iteration scan touches only the batch;
-    * at 100 TB that is the whole point of the knob. */
+    * at 100 TB that is the whole point of the knob. Fits the
+    * 2-feature (x1, x2, yq) model. */
   def logisticFitMiniBatch(feats: DataFrame, idCol: String,
                            iters: Int = 8, lr: Double = 1.0,
                            batches: Int = 4): DataFrame = {
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]] (logisticStep is
+    // r21: lazy-chained like [[logisticFitK]] (logisticStepK is
     // single-reference); iteration 1's batch scan populates the cache
-    var w = logisticInit(f.sparkSession).localCheckpoint(false)
+    var w = logisticInitK(f.sparkSession, 2).localCheckpoint(false)
     for (t <- 1 to iters) {
       val b = f.filter(expr(
         s"pmod(${Dedup.portableHash(s"cast($idCol as string)", "'sgd'")} + ${t - 1}, $batches) = 0"))
-      w = logisticStep(b, w, lr).localCheckpoint(t == iters)
+      w = logisticStepK(b, w, 2, lr).localCheckpoint(t == iters)
     }
     f.unpersist()
     w
   }
 
-  /** Score (idCol, x1, x2, yq) rows under fitted 1-row weights: broadcast
-    * the weights, emit (idCol, label, p_micro, pred) — pred thresholds at
-    * p >= 0.5, exact on the integer micro-probability. */
-  def logisticPredict2(feats: DataFrame, weights: DataFrame, idCol: String): DataFrame =
-    feats.crossJoin(broadcast(weights))
-      .selectExpr(idCol, "CAST(yq DIV 1000000 AS BIGINT) AS label",
-        s"$lrProbExpr AS p_micro")
-      .withColumn("pred",
-        expr("CAST(CASE WHEN p_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT)"))
-
-  /** The d-feature margin/probability — the fold reproduces
-    * [[lrProbExpr]]'s text byte-identically at d = 2. */
-  def lrProbExprK(d: Int): String = {
-    val margin = (1 to d).map(i => s"(w${i}q * x$i)")
-      .foldLeft("w0q")((a, t) => s"($a + $t)")
-    s"CAST(round(1000000.0 / (1.0 + exp(-(CAST($margin AS DOUBLE) / 65536.0)))) AS BIGINT)"
-  }
-
-  def logisticInitK(spark: org.apache.spark.sql.SparkSession, d: Int): DataFrame =
-    spark.range(1).selectExpr(
-      (0 to d).map(i => s"CAST(0 AS BIGINT) AS w${i}q"): _*)
-
-  /** d-FEATURE binary logistic regression (reference ml/classification/
-    * LogisticRegression fits arbitrary-width vectors; [[logisticFit2]]
-    * is the historical d = 2 scaffolding, reproduced byte-identically
-    * here at d = 2 — same probability text, same per-weight update
-    * string, one gradient sum per feature in the same single scan). */
-  def logisticFitK(feats: DataFrame, d: Int, iters: Int = 8,
-                   lr: Double = 1.0): DataFrame = {
-    require(d >= 1 && d <= 16, s"logisticFitK: d = $d outside [1, 16]")
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]] — weights ride through the
-    // aggregate (max of a broadcast constant), single state reference,
-    // lazy checkpoints with only the last eager
-    var w = logisticInitK(f.sparkSession, d).localCheckpoint(false)
-    for (t <- 1 to iters) {
-      w = f.crossJoin(broadcast(w))
-        .selectExpr(Seq(s"${lrProbExprK(d)} AS pq", "yq") ++
-          (1 to d).map(i => s"x$i") ++ (0 to d).map(i => s"w${i}q"): _*)
-        .agg(count(lit(1)).as("n"),
-          (sum(col("yq") - col("pq")).as("g0") +:
-            (1 to d).map(i => sum((col("yq") - col("pq")) * col(s"x$i")).as(s"g$i"))) ++
-            (0 to d).map(i => max(s"w${i}q").as(s"w${i}q")): _*)
-        .selectExpr(
-          (0 to d).map(i => s"${lrUpdExpr(s"w${i}q", s"g$i", lr)} AS w${i}q"): _*)
-        .localCheckpoint(t == iters)
-    }
-    f.unpersist()
-    w
-  }
-
-  /** Score (idCol, x1..xd, yq) under d-feature logistic weights — the
-    * [[logisticPredict2]] output contract. */
+  /** Score (idCol, x1..xd, yq) rows under fitted 1-row d-feature weights:
+    * broadcast the weights, emit (idCol, label, p_micro, pred) — pred
+    * thresholds at p >= 0.5, exact on the integer micro-probability. */
   def logisticPredictK(feats: DataFrame, weights: DataFrame, d: Int,
                        idCol: String): DataFrame =
     feats.crossJoin(broadcast(weights))
@@ -528,74 +484,14 @@ object Learn {
   private def smZ(k: Int): String =
     // least(·, 700) keeps exp finite for |z| beyond the IEEE overflow knee
     // (~709.78) — without it one wide margin turns the softmax into
-    // Inf/Inf = NaN → null, unlike lrProbExpr's 1/(1+exp(−z)) which
+    // Inf/Inf = NaN → null, unlike lrProbExprK's 1/(1+exp(−z)) which
     // saturates gracefully. Shared verbatim with the oracle, so both
     // engines clamp identically; a no-op at the gated magnitudes.
     s"least((CAST(((w0${k}q + (w1${k}q * x1)) + (w2${k}q * x2)) AS DOUBLE) / 65536.0), 700.0)"
 
-  /** Class-k micro softmax probability over the two pivoted weight
-    * blocks (k ∈ {1, 2}; class 0 carries the remaining mass). */
-  def smProbExpr(k: Int): String =
-    s"CAST(round((exp(${smZ(k)}) / (1.0 + (exp(${smZ(1)}) + exp(${smZ(2)})))) * 1000000.0) AS BIGINT)"
-
-  /** The six-zero starting row (two blocks × three weights). */
-  def softmaxInit(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.range(1).selectExpr(
-      (for (k <- 1 to 2; j <- 0 to 2) yield s"CAST(0 AS BIGINT) AS w$j${k}q"): _*)
-
-  /** One full-batch softmax ascent step: six exact integer gradient
-    * sums Σ(1e6·[y = k] − p_k)·x_j, then the shared [[lrUpdExpr]]
-    * update per weight. */
-  def softmaxStep(feats: DataFrame, w: DataFrame, lr: Double): DataFrame = {
-    // r21: single-reference — the six weight columns ride through the
-    // scan and the aggregate (max of a broadcast constant = the
-    // constant), so the lazy-checkpoint chain in [[softmaxFit2]] is safe
-    val wCols = for (k <- 1 to 2; j <- 0 to 2) yield s"w$j${k}q"
-    val scored = feats.crossJoin(broadcast(w))
-      .selectExpr(Seq("y", "x1", "x2",
-        s"${smProbExpr(1)} AS pm1", s"${smProbExpr(2)} AS pm2") ++ wCols: _*)
-      .selectExpr(Seq("x1", "x2",
-        "CAST(CASE WHEN y = 1 THEN 1000000 ELSE 0 END AS BIGINT) - pm1 AS e1",
-        "CAST(CASE WHEN y = 2 THEN 1000000 ELSE 0 END AS BIGINT) - pm2 AS e2") ++
-        wCols: _*)
-    scored.agg(count(lit(1)).as("n"),
-      Seq(sum("e1").as("g01"), sum(col("e1") * col("x1")).as("g11"),
-        sum(col("e1") * col("x2")).as("g21"),
-        sum("e2").as("g02"), sum(col("e2") * col("x1")).as("g12"),
-        sum(col("e2") * col("x2")).as("g22")) ++
-        wCols.map(c => max(c).as(c)): _*)
-      .selectExpr(
-        (for (k <- 1 to 2; j <- 0 to 2)
-          yield s"${lrUpdExpr(s"w$j${k}q", s"g$j$k", lr)} AS w$j${k}q"): _*)
-  }
-
-  def softmaxFit2(feats: DataFrame, iters: Int = 6,
-                  lr: Double = 1.0): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
-    var w = softmaxInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters)
-      w = softmaxStep(f, w, lr).localCheckpoint(t == iters)
-    f.unpersist()
-    w
-  }
-
-  /** Score rows under fitted blocks: micro p1/p2, p0 the exact
-    * complement, argmax prediction with ties to the SMALLEST class
-    * (reference :108's first-max scan order). */
-  def softmaxPredict2(feats: DataFrame, weights: DataFrame,
-                      idCol: String): DataFrame =
-    feats.crossJoin(broadcast(weights))
-      .selectExpr(idCol, "CAST(y AS BIGINT) AS label",
-        s"${smProbExpr(1)} AS p1_micro", s"${smProbExpr(2)} AS p2_micro")
-      .selectExpr(idCol, "label", "p1_micro", "p2_micro",
-        "CAST(1000000 - (p1_micro + p2_micro) AS BIGINT) AS p0_micro")
-      .selectExpr(idCol, "label", "p0_micro", "p1_micro", "p2_micro",
-        "CAST(CASE WHEN p0_micro >= p1_micro AND p0_micro >= p2_micro THEN 0" +
-          " WHEN p1_micro >= p2_micro THEN 1 ELSE 2 END AS BIGINT) AS pred")
-
-  /** Class-k probability at K total classes — the generated denominator
-    * reproduces [[smProbExpr]]'s text byte-identically at K = 3. */
+  /** Class-k micro softmax probability over the K−1 pivoted weight
+    * blocks at K total classes (k ∈ 1..K−1; class 0 carries the
+    * remaining mass) — ONE shared exp/denominator string. */
   def smProbExprK(k: Int, kTot: Int): String = {
     val den = (1 until kTot).map(j => s"exp(${smZ(j)})")
       .reduce((a, b) => s"($a + $b)")
@@ -607,16 +503,16 @@ object Learn {
     spark.range(1).selectExpr(
       (for (k <- 1 until kTot; j <- 0 to 2) yield s"CAST(0 AS BIGINT) AS w$j${k}q"): _*)
 
-  /** K-CLASS softmax regression (reference LogisticRegression.scala:91
-    * trains K−1 pivoted blocks for ANY numClasses; [[softmaxFit2]] is
-    * the K = 3 scaffolding, reproduced byte-identically there — same
-    * shared exp/denominator string, same per-weight update, 3·(K−1)
-    * exact gradient sums in one scan). */
+  /** K-CLASS softmax regression over (x1, x2, y) (reference
+    * LogisticRegression.scala:91 trains K−1 pivoted blocks for ANY
+    * numClasses): per ascent step ONE scan computing 3·(K−1) exact
+    * integer gradient sums Σ(1e6·[y = k] − p_k)·x_j, then the shared
+    * [[lrUpdExpr]] update per weight. */
   def softmaxFitK(feats: DataFrame, kTot: Int, iters: Int = 6,
                   lr: Double = 1.0): DataFrame = {
     require(kTot >= 2 && kTot <= 10, s"softmaxFitK: K = $kTot outside [2, 10]")
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]] — weights ride through
+    // r21: lazy-chained like [[logisticFitK]] — weights ride through
     // the scan/aggregate (single state reference per step)
     val wCols = for (k <- 1 until kTot; j <- 0 to 2) yield s"w$j${k}q"
     var w = softmaxInitK(f.sparkSession, kTot).localCheckpoint(false)
@@ -753,7 +649,7 @@ object Learn {
     val stCols = (0 to 2).flatMap(i => Seq(s"w${i}q", s"pw${i}q", s"pg$i"))
     var cur = feats
       .crossJoin(broadcast(state))
-      .selectExpr(Seq(s"$lrProbExpr AS pq", "yq", "x1", "x2") ++ stCols: _*)
+      .selectExpr(Seq(s"${lrProbExprK(2)} AS pq", "yq", "x1", "x2") ++ stCols: _*)
       .agg(count(lit(1)).as("n"),
         Seq(sum(col("yq") - col("pq")).as("gs0"),
           sum((col("yq") - col("pq")) * col("x1")).as("gs1"),
@@ -770,7 +666,7 @@ object Learn {
   def lbfgsFit2(feats: DataFrame, iters: Int = 6,
                 step: Double = 0.5, lr0: Double = 1.0): DataFrame = {
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
+    // r21: lazy-chained like [[logisticFitK]]
     var st = lbfgsInit(f.sparkSession).localCheckpoint(false)
     for (t <- 1 to iters)
       st = lbfgsStep(f, st, step, lr0).localCheckpoint(t == iters)
@@ -781,32 +677,23 @@ object Learn {
   // ---- multilayer perceptron (reference ml/ann/Layer.scala — AffineLayer
   // :173 forward x·W + b / :194 delta backprop W'·δ, FunctionalLayer
   // sigmoid :528 + its δ·f'(x) backprop; stacked by FeedForwardTopology
-  // :319 multiLayerPerceptron exactly as the 2-2-1 net here; driven by
+  // :319 multiLayerPerceptron as the d-h-1 net here; driven by
   // ml/classification/MultilayerPerceptronClassifier.scala:154 through
-  // GradientDescent. DECLARED DEVIATIONS, the s19 conventions: per-unit
-  // activations and per-row hidden deltas quantized to exact micro
-  // integers (so every gradient sum is partitioning-independent), a
-  // constant step, full batch, and a FIXED asymmetric integer init
-  // (±1-weight difference detectors) in place of the reference's seeded
-  // random init — zero init would leave the hidden units permanently
-  // identical, and randomness is exactly what the oracle gate cannot
-  // allow. -------------------------------------------------------------
-
-  /** Hidden-unit micro sigmoid over (bias, u, v) quantized weights and
-    * BIGINT (x1, x2) — the [[lrProbExpr]] algebra with nameable weight
-    * columns; shared verbatim with the oracle. */
-  def mlpHiddenExpr(b: String, u: String, v: String): String =
-    s"CAST(round(1000000.0 / (1.0 + exp(-(CAST((($b + ($u * x1)) + ($v * x2)) AS DOUBLE) / 65536.0)))) AS BIGINT)"
-
-  /** Output-unit micro sigmoid over quantized (v0q, v1q, v2q) and the
-    * micro hidden activations (h1, h2): the affine term is
-    * v0 + v1·h1/1e6 + v2·h2/1e6, all in one exact integer numerator. */
-  val mlpOutExpr: String =
-    "CAST(round(1000000.0 / (1.0 + exp(-(CAST(((v0q * 1000000) + ((v1q * h1) + (v2q * h2))) AS DOUBLE) / 65536000000.0)))) AS BIGINT)"
+  // GradientDescent, which takes layers: Array[Int]). The d-feature input
+  // and h-unit hidden layer are GENERATED (the s105 featPickExpr pattern
+  // applied to both layers): weight/gradient names, the fold-left affine
+  // text and the cyclic difference-detector init. DECLARED DEVIATIONS,
+  // the s19 conventions: per-unit activations and per-row hidden deltas
+  // quantized to exact micro integers (so every gradient sum is
+  // partitioning-independent), a constant step, full batch, and a FIXED
+  // asymmetric integer init (±1-weight difference detectors) in place of
+  // the reference's seeded random init — zero init would leave the
+  // hidden units permanently identical, and randomness is exactly what
+  // the oracle gate cannot allow. ---------------------------------------
 
   /** Per-row hidden delta in micro units: δ_h = δ_o·v/2^16 · h'(a) with
     * h' = h(1−h) on the micro activation — one fixed double expression,
-    * quantized so the six hidden-gradient sums stay exact integers. */
+    * quantized so the hidden-gradient sums stay exact integers. */
   def mlpHidDeltaExpr(vq: String, h: String): String =
     s"CAST(round((CAST((dlt * $vq) AS DOUBLE) / 65536.0) * ((CAST($h AS DOUBLE) / 1000000.0) * (1.0 - (CAST($h AS DOUBLE) / 1000000.0)))) AS BIGINT)"
 
@@ -816,99 +703,15 @@ object Learn {
   def mlpUpd12Expr(wq: String, g: String, lr: Double): String =
     s"$wq + CAST(round(($lr * ((CAST($g AS DOUBLE) / 1000000000000.0) / n)) * 65536.0) AS BIGINT)"
 
-  val mlpWeightCols: Seq[String] =
-    Seq("w10q", "w11q", "w12q", "w20q", "w21q", "w22q", "v0q", "v1q", "v2q")
-
-  /** The fixed difference-detector init: h1 fires on x1 > x2, h2 on
-    * x2 > x1, the output sums both. */
-  def mlpInit(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.sql("SELECT " + Seq(0L, 65536L, -65536L, 0L, -65536L, 65536L,
-        0L, 65536L, 65536L)
-      .zip(mlpWeightCols)
-      .map { case (v, c) => s"CAST($v AS BIGINT) AS $c" }.mkString(", "))
-
-  /** The per-row forward + delta projection under the weight row in
-    * scope — the shared unit of the training step, the scorer, and the
-    * oracle's unrolled iterations. */
-  private def mlpForwardCols: Seq[String] = Seq(
-    s"${mlpHiddenExpr("w10q", "w11q", "w12q")} AS h1",
-    s"${mlpHiddenExpr("w20q", "w21q", "w22q")} AS h2")
-
-  /** ONE full-batch backprop step over (x1, x2, yq) from the 1-row
-    * weight frame: forward, per-row quantized deltas, ten exact integer
-    * gradient sums, nine weight updates. */
-  def mlpStep(feats: DataFrame, w: DataFrame, lr: Double): DataFrame = {
-    // r21: single-reference — the nine weight columns ride through the
-    // forward/delta projections and the aggregate (max of a broadcast
-    // constant), so the lazy-checkpoint chain in [[mlpFitPredict]] is
-    // safe; the update projection runs over the aggregate's 1-row output.
-    val fwd = feats.crossJoin(broadcast(w))
-      .selectExpr(Seq("x1", "x2", "yq") ++ mlpWeightCols ++ mlpForwardCols: _*)
-      .selectExpr(Seq("x1", "x2", "h1", "h2",
-        s"yq - $mlpOutExpr AS dlt") ++ mlpWeightCols: _*)
-      .selectExpr(Seq("x1", "x2", "h1", "h2", "dlt",
-        s"${mlpHidDeltaExpr("v1q", "h1")} AS dh1",
-        s"${mlpHidDeltaExpr("v2q", "h2")} AS dh2") ++ mlpWeightCols: _*)
-    fwd.agg(count(lit(1)).as("n"),
-      Seq(sum("dlt").as("gv0"),
-        sum(col("dlt") * col("h1")).as("gv1"),
-        sum(col("dlt") * col("h2")).as("gv2"),
-        sum("dh1").as("g10"), sum(col("dh1") * col("x1")).as("g11"),
-        sum(col("dh1") * col("x2")).as("g12"),
-        sum("dh2").as("g20"), sum(col("dh2") * col("x1")).as("g21"),
-        sum(col("dh2") * col("x2")).as("g22")) ++
-        mlpWeightCols.map(c => max(c).as(c)): _*)
-      .selectExpr(
-        s"${lrUpdExpr("w10q", "g10", lr)} AS w10q",
-        s"${lrUpdExpr("w11q", "g11", lr)} AS w11q",
-        s"${lrUpdExpr("w12q", "g12", lr)} AS w12q",
-        s"${lrUpdExpr("w20q", "g20", lr)} AS w20q",
-        s"${lrUpdExpr("w21q", "g21", lr)} AS w21q",
-        s"${lrUpdExpr("w22q", "g22", lr)} AS w22q",
-        s"${lrUpdExpr("v0q", "gv0", lr)} AS v0q",
-        s"${mlpUpd12Expr("v1q", "gv1", lr)} AS v1q",
-        s"${mlpUpd12Expr("v2q", "gv2", lr)} AS v2q")
-  }
-
-  /** Train `iters` steps, then score (idCol, x1, x2, yq) rows: emits
-    * (id, label, h1, h2, o_micro, pred) — hidden activations gated too. */
-  def mlpFitPredict(feats: DataFrame, iters: Int, lr: Double,
-                    idCol: String, cohort: Long): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
-    var w = mlpInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters) w = mlpStep(f, w, lr).localCheckpoint(t == iters)
-    val out = f.filter(col(idCol) <= cohort)
-      .crossJoin(broadcast(w))
-      .selectExpr(Seq(idCol, "yq") ++ mlpWeightCols ++ mlpForwardCols: _*)
-      .selectExpr(idCol, "CAST(yq DIV 1000000 AS BIGINT) AS label",
-        "h1", "h2", s"$mlpOutExpr AS o_micro")
-      .selectExpr(idCol, "label", "h1", "h2", "o_micro",
-        "CAST(CASE WHEN o_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred")
-      .orderBy(idCol)
-    f.unpersist()
-    out
-  }
-
-  // ---- general (d, h) multilayer perceptron (reference ml/ann/Layer
-  // .scala stacks ARBITRARY affine+sigmoid layers and
-  // MultilayerPerceptronClassifier takes layers: Array[Int]; the 2-2-1
-  // member above is its smallest slice). The d-feature input and h-unit
-  // hidden layer are GENERATED (the s105 featPickExpr pattern applied
-  // to both layers): weight/gradient names, the fold-left affine text,
-  // and the cyclic difference-detector init all extend the 2-2-1
-  // strings, whose (2, 2) instantiation is byte-identical (MlpDhSpec
-  // pins the fitted scoring output equal to mlpFitPredict). ------------
-
-  /** Hidden unit j's weight columns then output weights — the (2, 2)
-    * slice is [[mlpWeightCols]] order-for-order. */
+  /** Hidden unit j's weight columns (bias first) then the output
+    * weights: w10q..w1dq, …, wh0q..whdq, v0q..vhq. */
   def mlpWeightColsDh(d: Int, h: Int): Seq[String] =
     (1 to h).flatMap(j => (0 to d).map(i => s"w$j${i}q")) ++
       (0 to h).map(j => s"v${j}q")
 
   /** Cyclic difference-detector init: unit j fires on
-    * x_{jm} − x_{jm+1} (jm = ((j−1) mod d) + 1), output sums all units
-    * — the (2, 2) values are the legacy fixed init exactly. */
+    * x_{jm} − x_{jm+1} (jm = ((j−1) mod d) + 1), output sums all units —
+    * at (2, 2): h1 fires on x1 > x2, h2 on x2 > x1. */
   def mlpInitValsDh(d: Int, h: Int): Seq[Long] =
     (1 to h).flatMap { j =>
       val jm = ((j - 1) % d) + 1
@@ -917,14 +720,18 @@ object Learn {
         if (i == jm) 65536L else if (i == neg) -65536L else 0L)
     } ++ (0L +: Seq.fill(h)(65536L))
 
-  /** [[mlpHiddenExpr]] generalized: fold-left affine over d inputs. */
+  /** Hidden unit j's micro sigmoid over its quantized weights and BIGINT
+    * (x1..xd) — the [[lrProbExprK]] algebra, fold-left affine over d
+    * inputs; shared verbatim with the oracle. */
   def mlpHiddenExprDh(j: Int, d: Int): String = {
     val aff = (1 to d).map(i => s"(w$j${i}q * x$i)")
       .foldLeft(s"w${j}0q")((a, t) => s"($a + $t)")
     s"CAST(round(1000000.0 / (1.0 + exp(-(CAST($aff AS DOUBLE) / 65536.0)))) AS BIGINT)"
   }
 
-  /** [[mlpOutExpr]] generalized: reduce-left over h hidden terms. */
+  /** Output-unit micro sigmoid over quantized v0q..vhq and the micro
+    * hidden activations h1..hh: the affine term v0 + Σ vj·hj/1e6 in one
+    * exact integer numerator, reduce-left over the h hidden terms. */
   def mlpOutExprH(h: Int): String = {
     val inner = (1 to h).map(j => s"(v${j}q * h$j)").reduce((a, b) => s"($a + $b)")
     s"CAST(round(1000000.0 / (1.0 + exp(-(CAST(((v0q * 1000000) + $inner) AS DOUBLE) / 65536000000.0)))) AS BIGINT)"
@@ -934,15 +741,17 @@ object Learn {
     spark.sql("SELECT " + mlpInitValsDh(d, h).zip(mlpWeightColsDh(d, h))
       .map { case (v, c) => s"CAST($v AS BIGINT) AS $c" }.mkString(", "))
 
-  /** ONE full-batch backprop step at (d, h) — the [[mlpStep]] loop with
-    * generated per-unit/per-input columns: forward, quantized deltas,
-    * (h+1)(d+2) exact integer gradient sums, the same update strings. */
+  /** ONE full-batch backprop step over (x1..xd, yq) from the 1-row
+    * weight frame at (d, h): forward, per-row quantized deltas,
+    * (h+1)(d+2) exact integer gradient sums, the weight updates. */
   def mlpStepDh(feats: DataFrame, w: DataFrame, d: Int, h: Int,
                 lr: Double): DataFrame = {
     val xs = (1 to d).map(i => s"x$i")
     val hs = (1 to h).map(j => s"h$j")
-    // r21: single-reference like [[mlpStep]] — the weight columns ride
-    // through the projections and the aggregate
+    // r21: single-reference — the weight columns ride through the
+    // forward/delta projections and the aggregate (max of a broadcast
+    // constant), so the lazy-checkpoint chain in [[mlpFitPredictDh]] is
+    // safe; the update projection runs over the aggregate's 1-row output.
     val wCols = mlpWeightColsDh(d, h)
     val fwd = feats.crossJoin(broadcast(w))
       .selectExpr(xs ++ Seq("yq") ++ wCols ++
@@ -964,15 +773,15 @@ object Learn {
           (1 to h).map(j => s"${mlpUpd12Expr(s"v${j}q", s"gv$j", lr)} AS v${j}q"))): _*)
   }
 
-  /** Train `iters` steps at (d, h), then score the cohort: emits
-    * (id, label, h1..hh, o_micro, pred) — the [[mlpFitPredict]] shape
-    * with h hidden activations. */
+  /** Train `iters` steps at (d, h), then score the (idCol, x1..xd, yq)
+    * rows with idCol <= `cohort`: emits (id, label, h1..hh, o_micro,
+    * pred) — hidden activations gated too. */
   def mlpFitPredictDh(feats: DataFrame, d: Int, h: Int, iters: Int,
                       lr: Double, idCol: String, cohort: Long): DataFrame = {
     require(d >= 2 && d <= 4 && h >= 2 && h <= 4,
       s"mlpFitPredictDh: (d, h) = ($d, $h) outside [2, 4] x [2, 4]")
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
+    // r21: lazy-chained like [[logisticFitK]]
     var w = mlpInitDh(f.sparkSession, d, h).localCheckpoint(false)
     for (t <- 1 to iters)
       w = mlpStepDh(f, w, d, h, lr).localCheckpoint(t == iters)
@@ -1000,7 +809,7 @@ object Learn {
   // reference's raw-score argmax except at quantized-probability TIES,
   // which are pinned to the smallest class — declared). -----------------
 
-  /** OVR over (idCol, x1, x2, cls): one [[logisticFit2]] per class on
+  /** OVR over (idCol, x1, x2, cls): one [[logisticFitK]] per class on
     * the cls-vs-rest micro label (each fit re-reads the SAME persisted
     * projection — classes multiply scans, never shuffles), then ONE
     * broadcast scoring pass over the `cohort` keys. Emits
@@ -1015,16 +824,16 @@ object Learn {
     // materializes all of them, and their broadcast cascades run
     // concurrently instead of one fit at a time
     val models = classes.map { c =>
-      logisticFit2(f.selectExpr("x1", "x2",
+      logisticFitK(f.selectExpr("x1", "x2",
           s"CAST(CASE WHEN cls = $c THEN 1000000 ELSE 0 END AS BIGINT) AS yq"),
-        iters, lr, eagerLast = false)
+        2, iters, lr, eagerLast = false)
         .selectExpr(s"CAST($c AS BIGINT) AS mcls", "w0q", "w1q", "w2q")
     }.reduce(_.unionByName(_)).localCheckpoint()
     val pivots = classes.map(c =>
       expr(s"max(CASE WHEN mcls = $c THEN p_micro END)").as(s"p$c"))
     val out = f.filter(col(idCol) <= cohort)
       .crossJoin(broadcast(models))
-      .selectExpr(idCol, "cls", "mcls", s"$lrProbExpr AS p_micro")
+      .selectExpr(idCol, "cls", "mcls", s"${lrProbExprK(2)} AS p_micro")
       .groupBy(idCol, "cls")
       .agg(pivots.head,
         (pivots.tail :+
@@ -1042,31 +851,6 @@ object Learn {
   // the impurity gain — the identical shape below; impurity/Gini.scala:40
   // is the 1 - Σ p² this score maximizes the complement of) --------------
 
-  /** Depth-2 binary classification tree over a (x1, x2, y) table
-    * (BIGINT features, y ∈ {0, 1}), trained by per-level histogram
-    * splits. Per level: ONE hash aggregate builds the (node, feature,
-    * value) label histogram (map-side combined — the histogram, not the
-    * data, is what shuffles, exactly DecisionTree.findBestSplits'
-    * design), a prefix-sum window turns it into every candidate split
-    * "feature <= value"'s left/right label counts, and the best split
-    * per node maximizes the exact integer milli-unit Gini complement
-    *   score = (lp² + (nl−lp)²)·1000 div nl + (rp² + (nr−rp)²)·1000 div nr
-    * (minimizing weighted Gini impurity ≡ maximizing this sum — the
-    * div-by-1000 quantization is the shared-oracle currency; ties break
-    * to the smallest (feature, value)). Rows then route node → 2·node
-    * (value <= threshold) or 2·node+1, and the next level repeats —
-    * so leaf ids encode the root-to-leaf path. A node with no valid
-    * split (single distinct value on both features) stays a leaf.
-    *
-    * Overflow headroom: count² · 1000 needs per-node counts below ~9.5e7
-    * (orders up to sf~600); past that the score currency drops to
-    * centi-units or DECIMAL — noted here because the histogram pass
-    * itself is scale-free (its size is nodes × features × bins,
-    * independent of row count).
-    *
-    * Returns (leaves, splits): leaves = (leaf, n, n_pos, pred) with the
-    * majority label (exact ties predict 0), splits = (node, feat, thr,
-    * score) for every internal node. */
   /** One `a·ln(a/n)` term, zero-safe (0·ln 0 = 0 — Entropy.scala:40's
     * guard). */
   private def plogp(a: String, n: String): String =
@@ -1101,7 +885,17 @@ object Learn {
   def varianceScoreExpr(div: String): String =
     s"CAST((abs(lp) $div nl) * abs(lp) + (abs(tp - lp) $div (tn - nl)) * abs(tp - lp) AS BIGINT)"
 
-  /** The shared per-level fit loop over (x1, x2, y, node) rows: one
+  /** The per-feature value pick `CASE WHEN feat = 1 THEN x1 … ELSE xn
+    * END`. */
+  private def featPickExpr(nFeats: Int): String =
+    "CASE " + (1 until nFeats).map(i => s"WHEN feat = $i THEN x$i").mkString(" ") +
+      s" ELSE x$nFeats END"
+
+  private def featStackExpr(nFeats: Int): String =
+    s"stack($nFeats, " + (1 to nFeats).map(i => s"${i}L, x$i").mkString(", ") +
+      ") AS (feat, val)"
+
+  /** The shared per-level fit loop over (x1..xn, y, node) rows: one
     * (node, feature, value) histogram hash aggregate per level, the
     * prefix-sum candidate table, the per-node argmax under `scoreExpr`
     * (ties to the smallest (feat, val)), and the node → 2·node /
@@ -1115,16 +909,6 @@ object Learn {
     * (prices, scores) must pass through [[binnedFeatures]] first —
     * the reference's own maxBins design — which caps every window
     * below features·maxBins rows per node. */
-  /** The per-feature value pick `CASE WHEN feat = 1 THEN x1 … ELSE xn
-    * END` — generated so n = 2 reproduces the historical text exactly. */
-  private def featPickExpr(nFeats: Int): String =
-    "CASE " + (1 until nFeats).map(i => s"WHEN feat = $i THEN x$i").mkString(" ") +
-      s" ELSE x$nFeats END"
-
-  private def featStackExpr(nFeats: Int): String =
-    s"stack($nFeats, " + (1 to nFeats).map(i => s"${i}L, x$i").mkString(", ") +
-      ") AS (feat, val)"
-
   private def treeLevels(rows0: DataFrame, maxDepth: Int,
                          scoreExpr: String,
                          candFilter: Option[String] = None,
@@ -1202,10 +986,42 @@ object Learn {
     "CAST((((lp * lp) + ((nl - lp) * (nl - lp))) * 1000) DIV nl" +
       " + ((((tp - lp) * (tp - lp)) + (((tn - nl) - (tp - lp)) * ((tn - nl) - (tp - lp)))) * 1000) DIV (tn - nl) AS BIGINT)"
 
-  def decisionTree2(rows: DataFrame, maxDepth: Int = 2,
+  /** Depth-`maxDepth` binary classification tree over a (x1..x{nFeats},
+    * y) table (BIGINT features, y ∈ {0, 1}; the reference trains on
+    * arbitrary-width vectors), trained by per-level histogram splits.
+    * Per level: ONE hash aggregate builds the (node, feature, value)
+    * label histogram (map-side combined — the histogram, not the data,
+    * is what shuffles, exactly DecisionTree.findBestSplits' design), a
+    * prefix-sum window turns it into every candidate split
+    * "feature <= value"'s left/right label counts, and the best split
+    * per node maximizes the exact integer milli-unit Gini complement
+    *   score = (lp² + (nl−lp)²)·1000 div nl + (rp² + (nr−rp)²)·1000 div nr
+    * (minimizing weighted Gini impurity ≡ maximizing this sum — the
+    * div-by-1000 quantization is the shared-oracle currency; every
+    * feature's thresholds compete in the SAME per-node argmax, ties
+    * break to the smallest (feature, value)). `impurity = "entropy"`
+    * swaps in [[entropyScoreExpr]]; `minInstancesPerNode` /
+    * `minGainMilli` add the gini-only [[treeCandFilterExpr]]. Rows then
+    * route node → 2·node (value <= threshold) or 2·node+1, and the next
+    * level repeats — so leaf ids encode the root-to-leaf path. A node
+    * with no valid split (single distinct value on every feature)
+    * stays a leaf.
+    *
+    * Overflow headroom: count² · 1000 needs per-node counts below ~9.5e7
+    * (orders up to sf~600); past that the score currency drops to
+    * centi-units or DECIMAL — noted here because the histogram pass
+    * itself is scale-free (its size is nodes × features × bins,
+    * independent of row count).
+    *
+    * Returns (leaves, splits): leaves = (leaf, n, n_pos, pred) with the
+    * majority label (exact ties predict 0), splits = (node, feat, thr,
+    * score) for every internal node. */
+  def decisionTreeK(rows: DataFrame, nFeats: Int, maxDepth: Int = 2,
                     impurity: String = "gini",
                     minInstancesPerNode: Long = 1L,
                     minGainMilli: Long = 0L): (DataFrame, DataFrame) = {
+    require(nFeats >= 2 && nFeats <= 16,
+      s"decisionTreeK: nFeats $nFeats outside [2, 16]")
     val scoreExpr =
       if (impurity == "entropy") entropyScoreExpr
       else giniScoreExpr
@@ -1217,34 +1033,9 @@ object Learn {
         Some(treeCandFilterExpr(minInstancesPerNode, minGainMilli, "DIV"))
       }
     val (r, allSplits) = treeLevels(
-      rows.select(col("x1"), col("x2"), col("y"), lit(1L).as("node")),
-      maxDepth, scoreExpr, candFilter)
-    val leaves = r.groupBy(col("node").as("leaf"))
-      .agg(count(lit(1)).as("n"), sum("y").as("n_pos"))
-      .withColumn("pred",
-        expr("CAST(CASE WHEN 2 * n_pos > n THEN 1 ELSE 0 END AS BIGINT)"))
-    (leaves, allSplits)
-  }
-
-  /** The d-FEATURE gini tree — the same level-synchronous machinery as
-    * [[decisionTree2]] with the feature axis generalized (the reference
-    * trains on arbitrary-width vectors; every other gated tree row runs
-    * the historical 2-feature scaffolding, which this reproduces
-    * byte-identically at nFeats = 2). The per-level histogram stacks
-    * nFeats legs instead of two; every feature's thresholds compete in
-    * the SAME per-node argmax (feat index tiebreak, the
-    * findBestSplits convention). Input columns x1..x{nFeats}, y. */
-  def decisionTreeK(rows: DataFrame, nFeats: Int,
-                    maxDepth: Int = 2): (DataFrame, DataFrame) = {
-    require(nFeats >= 2 && nFeats <= 16,
-      s"decisionTreeK: nFeats $nFeats outside [2, 16]")
-    val scoreExpr =
-      "CAST((((lp * lp) + ((nl - lp) * (nl - lp))) * 1000) DIV nl" +
-        " + ((((tp - lp) * (tp - lp)) + (((tn - nl) - (tp - lp)) * ((tn - nl) - (tp - lp)))) * 1000) DIV (tn - nl) AS BIGINT)"
-    val (r, allSplits) = treeLevels(
       rows.select((1 to nFeats).map(i => col(s"x$i")) ++
         Seq(col("y"), lit(1L).as("node")): _*),
-      maxDepth, scoreExpr, None, nFeats)
+      maxDepth, scoreExpr, candFilter, nFeats)
     val leaves = r.groupBy(col("node").as("leaf"))
       .agg(count(lit(1)).as("n"), sum("y").as("n_pos"))
       .withColumn("pred",
@@ -1454,7 +1245,7 @@ object Learn {
     * mllib/tree/DecisionTree.scala:248 trainRegressor with
     * impurity/Variance.scala:52 (impurity = (Σy² − (Σy)²/n)/n): the
     * identical findBestSplits per-level histogram machinery as
-    * [[decisionTree2]], with the label-count histogram replaced by the
+    * [[decisionTreeK]], with the label-count histogram replaced by the
     * (count, Σtarget) sufficient statistics Variance.calculate consumes
     * and the split argmax under [[varianceScoreExpr]] (Σy² is
     * split-invariant, so it never needs aggregating — exactly why the
@@ -1495,7 +1286,7 @@ object Learn {
       .drop("feat", "thr")
 
   /** Route arbitrary (x1, x2, ...) rows through a FITTED tree's split
-    * table ([[decisionTree2]]'s second return — node ids are tree-coded,
+    * table ([[decisionTreeK]]'s second return — node ids are tree-coded,
     * so one table serves every level): adds the destination leaf as
     * `node`. Scoring rows may carry values outside the training range —
     * the <= threshold CASE handles them like any other. */
@@ -1601,7 +1392,7 @@ object Learn {
     * categoricalFeaturesInfo leg: feature 1's candidates are centroid-
     * order prefixes from [[centroidCategoryRanks]] (subset splits, not
     * value-order cuts), feature 2 stays an ordered numeric. The fit
-    * itself is [[decisionTree2]] over the rank-encoded frame — the
+    * itself is [[decisionTreeK]] over the rank-encoded frame — the
     * encode join broadcasts the arity-bounded rank table, so the
     * per-level histogram machinery (and its bins-bounded windows) is
     * reused unchanged. Scoring never re-encodes: fitted feat-1 splits
@@ -1621,7 +1412,7 @@ object Learn {
     val ranks = centroidCategoryRanks(base, "cat", "y")
     val enc = base.join(broadcast(ranks.select("cat", "crank")), "cat")
       .select(col("crank").as("x1"), col("x2"), col("y"))
-    val (_, splits) = decisionTree2(enc, maxDepth)
+    val (_, splits) = decisionTreeK(enc, 2, maxDepth)
     val rk = ranks.select("cat", "crank").collect() // arity-bounded
       .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2)
     val sp = splits.select("node", "feat", "thr").collect() // nodes-bounded
@@ -1745,7 +1536,7 @@ object Learn {
 
   /** Random forest of depth-2 trees (reference
     * mllib/src/main/scala/org/apache/spark/mllib/tree/RandomForest.scala:
-    * 70 — an ensemble of [[decisionTree2]]-style histogram trees over
+    * 70 — an ensemble of [[decisionTreeK]]-style histogram trees over
     * bagged rows, majority vote at prediction). Deliberate deviations for
     * the cross-engine oracle, per the house rules: bagging is the
     * DETERMINISTIC complement-of-residue-class subset (tree t trains on
@@ -1843,78 +1634,44 @@ object Learn {
   // Gradient.scala:273 contributes -y·x exactly when y·(w·x) < 1, the
   // margin test below in quantized integer form) ------------------------
 
+  /** The d-feature quantized margin `((w0q + (w1q * x1)) + (w2q * x2)) …`
+    * — fold-left, shared verbatim with the oracle. */
+  def svmMarginK(d: Int): String =
+    (1 to d).map(i => s"(w${i}q * x$i)").foldLeft("w0q")((a, t) => s"($a + $t)")
+
   /** One hinge subgradient component: a row contributes ys (times the
     * feature) iff its margin y·(w·x) is below 1 — in quantized units the
     * test is the EXACT INTEGER comparison ys·zq < 2^16, so the violator
     * set is engine-identical by construction (no doubles touch the
-    * margin). `mult` is "" for the intercept, " * x1" / " * x2" for the
-    * weights. */
-  def svmGradTerm(mult: String): String =
-    s"CASE WHEN ys * ((w0q + (w1q * x1)) + (w2q * x2)) < 65536 THEN ys$mult ELSE 0 END"
+    * margin). `mult` is "" for the intercept, " * xi" for weight i. */
+  def svmGradTermK(d: Int, mult: String): String =
+    s"CASE WHEN ys * ${svmMarginK(d)} < 65536 THEN ys$mult ELSE 0 END"
 
   /** One weight's hinge-ascent update — mean violator gradient scaled by
     * the constant step, re-quantized; shared verbatim with the oracle. */
   def svmUpdExpr(wq: String, g: String, lr: Double): String =
     s"$wq + CAST(round(($lr * (CAST($g AS DOUBLE) / n)) * 65536.0) AS BIGINT)"
 
-  /** Linear SVM over (x1, x2, ys) with ys ∈ {-1, +1}: `iters` full-batch
-    * hinge subgradient steps (SVMWithSGD at miniBatchFraction = 1.0,
-    * regParam = 0 — plain hinge; both legal reference settings, and one
-    * less per-step term to mirror). Per iteration ONE scan computing
-    * three exact integer gradient sums over the integer-exact violator
-    * set; the single double expression per update has fixed
-    * parenthesization. Weights quantized to 2^16 units; the weight row
-    * localCheckpoints per step. Callers should CENTER wide features
-    * (x - mean-ish offset): hinge GD from zero oscillates on offset
-    * features exactly like logistic GD does (measured: 52% vs 89%
-    * accuracy on the same s19-style data, centered vs not). */
-  def svmFit2(feats: DataFrame, iters: Int = 8, lr: Double = 0.5): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]] — the weights ride through
-    // the gradient aggregate (max of a broadcast constant), single state
-    // reference per step, only the last checkpoint eager
-    var w = f.sparkSession.range(1)
-      .selectExpr("CAST(0 AS BIGINT) AS w0q", "CAST(0 AS BIGINT) AS w1q",
-        "CAST(0 AS BIGINT) AS w2q")
-      .localCheckpoint(false)
-    for (t <- 1 to iters) {
-      w = f.crossJoin(broadcast(w))
-        .agg(count(lit(1)).as("n"),
-          sum(expr(svmGradTerm(""))).as("g0"),
-          sum(expr(svmGradTerm(" * x1"))).as("g1"),
-          sum(expr(svmGradTerm(" * x2"))).as("g2"),
-          max("w0q").as("w0q"), max("w1q").as("w1q"), max("w2q").as("w2q"))
-        .selectExpr(
-          s"${svmUpdExpr("w0q", "g0", lr)} AS w0q",
-          s"${svmUpdExpr("w1q", "g1", lr)} AS w1q",
-          s"${svmUpdExpr("w2q", "g2", lr)} AS w2q")
-        .localCheckpoint(t == iters)
-    }
-    f.unpersist()
-    w
-  }
-
-  /** The d-feature quantized margin — reproduces the historical text
-    * byte-identically at d = 2. */
-  def svmMarginK(d: Int): String =
-    (1 to d).map(i => s"(w${i}q * x$i)").foldLeft("w0q")((a, t) => s"($a + $t)")
-
-  def svmGradTermK(d: Int, mult: String): String =
-    s"CASE WHEN ys * ${svmMarginK(d)} < 65536 THEN ys$mult ELSE 0 END"
-
-  /** d-FEATURE linear SVM (reference SVMWithSGD fits arbitrary-width
-    * vectors; [[svmFit2]] is the 2-feature scaffolding, reproduced
-    * byte-identically at d = 2 — same integer violator test, same
-    * per-weight update string, one hinge gradient sum per feature in
-    * one scan). The centering caveat from svmFit2 applies per feature. */
+  /** d-feature linear SVM over (x1..xd, ys) with ys ∈ {-1, +1}
+    * (reference SVMWithSGD fits arbitrary-width vectors): `iters`
+    * full-batch hinge subgradient steps (SVMWithSGD at
+    * miniBatchFraction = 1.0, regParam = 0 — plain hinge; both legal
+    * reference settings, and one less per-step term to mirror). Per
+    * iteration ONE scan computing d + 1 exact integer gradient sums over
+    * the integer-exact violator set; the single double expression per
+    * update has fixed parenthesization. Weights quantized to 2^16 units;
+    * the weight row localCheckpoints per step. Callers should CENTER
+    * wide features (x - mean-ish offset): hinge GD from zero oscillates
+    * on offset features exactly like logistic GD does (measured: 52% vs
+    * 89% accuracy on the same s19-style data, centered vs not). */
   def svmFitK(feats: DataFrame, d: Int, iters: Int = 8,
               lr: Double = 0.5): DataFrame = {
     require(d >= 1 && d <= 16, s"svmFitK: d = $d outside [1, 16]")
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[svmFit2]]
-    var w = f.sparkSession.range(1)
-      .selectExpr((0 to d).map(i => s"CAST(0 AS BIGINT) AS w${i}q"): _*)
-      .localCheckpoint(false)
+    // r21: lazy-chained like [[logisticFitK]] — the weights ride through
+    // the gradient aggregate (max of a broadcast constant), single state
+    // reference per step, only the last checkpoint eager
+    var w = logisticInitK(f.sparkSession, d).localCheckpoint(false)
     for (t <- 1 to iters) {
       w = f.crossJoin(broadcast(w))
         .agg(count(lit(1)).as("n"),
@@ -1929,8 +1686,9 @@ object Learn {
     w
   }
 
-  /** Score (idCol, x1..xd, ys) under d-feature SVM weights — the
-    * svmPredict2 output contract. */
+  /** Score (idCol, x1..xd, ys) under fitted d-feature weights: the
+    * quantized decision value and the sign prediction — both exact
+    * integers. */
   def svmPredictK(feats: DataFrame, weights: DataFrame, d: Int,
                   idCol: String): DataFrame =
     feats.crossJoin(broadcast(weights))
@@ -1950,21 +1708,19 @@ object Learn {
     s"$wq + CAST(round(($lr * ((CAST($g AS DOUBLE) / n)" +
       s" - (CAST($lambda AS DOUBLE) * (CAST($wq AS DOUBLE) / 65536.0)))) * 65536.0) AS BIGINT)"
 
-  /** [[svmFit2]] with the reference's default L2 regularization. */
+  /** [[svmFitK]] at d = 2 with the reference's default L2
+    * regularization. */
   def svmFitL2(feats: DataFrame, iters: Int = 8, lr: Double = 0.5,
                lambda: Double = 0.01): DataFrame = {
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[svmFit2]]
-    var w = f.sparkSession.range(1)
-      .selectExpr("CAST(0 AS BIGINT) AS w0q", "CAST(0 AS BIGINT) AS w1q",
-        "CAST(0 AS BIGINT) AS w2q")
-      .localCheckpoint(false)
+    // r21: lazy-chained like [[svmFitK]]
+    var w = logisticInitK(f.sparkSession, 2).localCheckpoint(false)
     for (t <- 1 to iters) {
       w = f.crossJoin(broadcast(w))
         .agg(count(lit(1)).as("n"),
-          sum(expr(svmGradTerm(""))).as("g0"),
-          sum(expr(svmGradTerm(" * x1"))).as("g1"),
-          sum(expr(svmGradTerm(" * x2"))).as("g2"),
+          sum(expr(svmGradTermK(2, ""))).as("g0"),
+          sum(expr(svmGradTermK(2, " * x1"))).as("g1"),
+          sum(expr(svmGradTermK(2, " * x2"))).as("g2"),
           max("w0q").as("w0q"), max("w1q").as("w1q"), max("w2q").as("w2q"))
         .selectExpr(
           s"${svmUpdL2Expr("w0q", "g0", lr, lambda)} AS w0q",
@@ -1975,15 +1731,6 @@ object Learn {
     f.unpersist()
     w
   }
-
-  /** Score (idCol, x1, x2, ys) under fitted weights: the quantized
-    * decision value and the sign prediction — both exact integers. */
-  def svmPredict2(feats: DataFrame, weights: DataFrame, idCol: String): DataFrame =
-    feats.crossJoin(broadcast(weights))
-      .selectExpr(idCol, "CAST(ys AS BIGINT) AS label",
-        "CAST((w0q + (w1q * x1)) + (w2q * x2) AS BIGINT) AS score_q")
-      .withColumn("pred",
-        expr("CAST(CASE WHEN score_q >= 0 THEN 1 ELSE -1 END AS BIGINT)"))
 
   // ---- lasso / linear SGD (reference mllib/src/main/scala/org/apache/
   // spark/mllib/regression/Lasso.scala:88 trains squared loss through
@@ -2017,7 +1764,7 @@ object Learn {
 
   /** One full-batch squared-loss gradient step over (x1, x2, y) BIGINT
     * features from the 1-row weight frame — the shared unit of
-    * [[lassoFit2]] and the streaming linear-regression query (reference
+    * [[elasticNetFit2]] and the streaming linear-regression query (reference
     * regression/StreamingLinearRegressionWithSGD.scala:43, trained
     * through StreamingLinearAlgorithm.scala:88's trainOn — which runs a
     * full numIterations GradientDescent pass per batch seeded from the
@@ -2028,7 +1775,7 @@ object Learn {
   def linearStep(feats: DataFrame, w: DataFrame, lr: Double): DataFrame = {
     // r21: single-reference — the weights ride through the residual scan
     // and aggregate (max of a broadcast constant), so the lazy-checkpoint
-    // chains in [[lassoFit2]]/[[elasticNetFit2]] are safe
+    // chain in [[elasticNetFit2]] is safe
     feats.crossJoin(broadcast(w))
       .selectExpr(s"y - $linPredExpr AS r", "x1", "x2",
         "w0q", "w1q", "w2q")
@@ -2040,28 +1787,6 @@ object Learn {
         s"${linUpdExpr("w0q", "g0", lr)} AS w0q",
         s"${linUpdExpr("w1q", "g1", lr)} AS w1q",
         s"${linUpdExpr("w2q", "g2", lr)} AS w2q")
-  }
-
-  /** Lasso over (x1, x2, y): `iters` ISTA iterations — one [[linearStep]]
-    * then the L1 soft-threshold on the two FEATURE weights (the intercept
-    * is never penalized; deliberate deviation from the reference, whose
-    * appendBias weight rides through L1Updater like any other — the s23
-    * ridge convention, declared the same way). Per iteration ONE scan;
-    * weight frame localCheckpoints per step. */
-  def lassoFit2(feats: DataFrame, iters: Int = 8, lr: Double = 0.002,
-                lambda: Double = 20.0): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
-    val shrinkq = lassoShrinkQ(lr, lambda)
-    var w = logisticInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters)
-      w = linearStep(f, w, lr).selectExpr(
-          "w0q",
-          s"${softThresholdExpr("w1q", shrinkq)} AS w1q",
-          s"${softThresholdExpr("w2q", shrinkq)} AS w2q")
-        .localCheckpoint(t == iters)
-    f.unpersist()
-    w
   }
 
   /** Elastic-net L2 divisor 1 + lr·λ·(1−α): the proximal operator of the
@@ -2083,21 +1808,25 @@ object Learn {
     if (l2div == 1.0) softThresholdExpr(wq, shrinkq)
     else s"CAST(round(CAST((${softThresholdExpr(wq, shrinkq)}) AS DOUBLE) / CAST($l2div AS DOUBLE)) AS BIGINT)"
 
-  /** Elastic-net regression over (x1, x2, y): [[lassoFit2]]'s ISTA loop
-    * with the mixed proximal step — soft-threshold by lr·λ·α, then the
-    * L2 shrink division; the intercept stays unpenalized (the s23/s33
-    * convention, declared there). α = 1 IS lassoFit2 by construction;
-    * α = 0 converges to [[ridgeFit2]]'s normal-equation solution with
-    * the SAME λ (both minimize (1/n)Σr² + λ‖w‖₂² up to the shared
-    * factor — spec-pinned). Per iteration ONE scan. */
+  /** Elastic-net regression over (x1, x2, y): `iters` ISTA iterations —
+    * one [[linearStep]], then the mixed proximal step on the two FEATURE
+    * weights: soft-threshold by lr·λ·α, then the L2 shrink division. The
+    * intercept is never penalized (deliberate deviation from the
+    * reference, whose appendBias weight rides through L1Updater like any
+    * other — the s23 ridge convention, declared the same way). α = 1 IS
+    * the lasso (the step degenerates to [[softThresholdExpr]]); α = 0
+    * converges to [[ridgeFit2]]'s normal-equation solution with the SAME
+    * λ (both minimize (1/n)Σr² + λ‖w‖₂² up to the shared factor —
+    * spec-pinned). Per iteration ONE scan; the weight frame
+    * localCheckpoints per step. */
   def elasticNetFit2(feats: DataFrame, iters: Int = 8, lr: Double = 0.002,
                      lambda: Double = 20.0, alpha: Double = 0.5): DataFrame = {
     require(alpha >= 0.0 && alpha <= 1.0, s"elasticNetFit2: alpha $alpha outside [0, 1]")
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
+    // r21: lazy-chained like [[logisticFitK]]
     val shrinkq = lassoShrinkQ(lr, lambda * alpha)
     val l2div = elasticL2Div(lr, lambda, alpha)
-    var w = logisticInit(f.sparkSession).localCheckpoint(false)
+    var w = logisticInitK(f.sparkSession, 2).localCheckpoint(false)
     for (t <- 1 to iters)
       w = linearStep(f, w, lr).selectExpr(
           "w0q",
@@ -2467,22 +2196,22 @@ object Learn {
   // — skip-gram over a minCount-pruned vocabulary (learnVocab :139, the
   // vocabulary bound that keeps the model size corpus-independent),
   // window'd center/context pairs (:320), sigmoid gradient steps on
-  // dot(center, context) (:340-360 with the precomputed expTable :120).
-  // DECLARED DEVIATIONS, the s19/s44 conventions plus two structural
-  // ones: (1) the OBJECTIVE is Mikolov et al.'s negative-sampling
-  // variant (one deterministic rank-hash negative per pair) instead of
-  // the reference's hierarchical softmax — a Huffman path is a per-word
-  // variable-length traversal no oracle can unroll generically, while
-  // the NS form is two sigmoid terms per pair; (2) vectors are 2-d,
+  // dot(center, context) (:340-360 with the precomputed expTable :120);
+  // `vectorSize`, the model's headline parameter (default 100), is
+  // `dims` here). DECLARED DEVIATIONS, the s19/s44 conventions plus two
+  // structural ones: (1) the OBJECTIVE is Mikolov et al.'s
+  // negative-sampling variant (one deterministic rank-hash negative per
+  // pair) instead of the reference's hierarchical softmax — a Huffman
+  // path is a per-word variable-length traversal no oracle can unroll
+  // generically, while the NS form is two sigmoid terms per pair; (2)
   // ONE full-batch step from a deterministic ascii-hash init (the
-  // reference seeds per-word XORShift randoms, :291), every gradient
-  // sum an exact micro×quant integer and the sigmoid/update each one
-  // shared fixed-parenthesization double expression. Deviation (2)'s
-  // dim axis is CLOSED by [[word2vecD]] (s113 gates dims = 3; the
-  // dims = 2 slice reproduces this member byte-identically); deviation
-  // (1) remains declared with the rationale above. ---------------------
+  // reference seeds per-word XORShift randoms, :291), every gradient sum
+  // an exact micro×quant integer and the sigmoid/update each one shared
+  // fixed-parenthesization double expression. The dim axis is GENERATED
+  // (the s105/alsRank discipline): per-component init residue mixes,
+  // fold-left dot products and per-component gradient sums. -------------
 
-  /** Sigmoid of a quantized 2-d dot product in micro-units: `dot` is in
+  /** Sigmoid of a quantized dot product in micro-units: `dot` is in
     * Q² = 2^32 units. Shared verbatim with the oracle. */
   def w2vSigmoidExpr(dot: String): String =
     s"CAST(round(1000000.0 / (1.0 + exp(-(CAST($dot AS DOUBLE) / 4294967296.0)))) AS BIGINT)"
@@ -2502,28 +2231,44 @@ object Learn {
     "((ascii(substring(tok, 1, 1)) * 97) + " +
       "(ascii(substring(tok, length(tok), 1)) * 31) + (length(tok) * 7))"
 
-  /** Input- and output-side init components over (h) — the ALS
-    * sign-diverse recipe with different residue mixes per side. */
-  val w2vInitExprs: Seq[(String, String)] = Seq(
-    "u1q" -> "CAST(65536 + ((h % 7) * 8192) AS BIGINT)",
-    "u2q" -> "CAST(((h % 5) - 2) * 16384 AS BIGINT)",
-    "v1q" -> "CAST(65536 + ((h % 5) * 8192) AS BIGINT)",
-    "v2q" -> "CAST(((h % 7) - 3) * 16384 AS BIGINT)")
+  /** Input- (u) and output-side (v) init components over (h) — the ALS
+    * sign-diverse recipe: component 1 of each side is the positive
+    * popularity direction, components ≥ 2 sign-diverse spreads on
+    * side-distinct coprime moduli. */
+  def w2vInitExprsD(dims: Int): Seq[(String, String)] = {
+    require(dims >= 2 && dims <= 4, s"w2vInitExprsD: dims $dims outside [2, 4]")
+    val uMods = Vector(7, 5, 3, 11)
+    val vMods = Vector(5, 7, 11, 3)
+    def side(prefix: String, mods: Vector[Int]): Seq[(String, String)] =
+      (1 to dims).map { i =>
+        if (i == 1) s"${prefix}1q" -> s"CAST(65536 + ((h % ${mods(0)}) * 8192) AS BIGINT)"
+        else {
+          val m = mods(i - 1)
+          s"$prefix${i}q" -> s"CAST(((h % $m) - ${(m - 1) / 2}) * 16384 AS BIGINT)"
+        }
+      }
+    side("u", uMods) ++ side("v", vMods)
+  }
 
-  /** Skip-gram word2vec over (`idCol`, `textCol`): top-`vocabN` tokens
-    * by (count desc, token) form the vocabulary (minCount's bounded-
-    * model analog — everything downstream is vocabulary-bounded except
-    * the row-linear pair extraction); center/context pairs within
-    * ±`window` positions over the VOCAB-FILTERED sequence (the
-    * reference drops OOV words before building sentences,
-    * Word2Vec.scala:300); per pair one positive sigmoid term and one
-    * deterministic negative (vocab rank (r_center + 7·r_context + 3)
-    * mod V). One full-batch step, then the joined in/out vectors for
-    * the top-`topK` ranks: (tok, rnk, u1q, u2q, v1q, v2q). */
-  def word2vec(docs: DataFrame, idCol: String, textCol: String,
-               vocabN: Int = 30, window: Int = 2, lr: Double = 0.025,
-               topK: Int = 20): DataFrame = {
+  private def w2vDot(a: Seq[String], b: Seq[String]): String =
+    a.zip(b).map { case (x, y) => s"($x * $y)" }.reduce((p, q) => s"$p + $q")
+
+  /** Skip-gram word2vec over (`idCol`, `textCol`) with `dims`-component
+    * vectors: top-`vocabN` tokens by (count desc, token) form the
+    * vocabulary (minCount's bounded-model analog — everything downstream
+    * is vocabulary-bounded except the row-linear pair extraction);
+    * center/context pairs within ±`window` positions over the
+    * VOCAB-FILTERED sequence (the reference drops OOV words before
+    * building sentences, Word2Vec.scala:300); per pair one positive
+    * sigmoid term and one deterministic negative (vocab rank
+    * (r_center + 7·r_context + 3) mod V). One full-batch step, then the
+    * joined in/out vectors for the top-`topK` ranks:
+    * (tok, rnk, u1q..u{dims}q, v1q..v{dims}q). */
+  def word2vecD(docs: DataFrame, idCol: String, textCol: String,
+                vocabN: Int = 30, window: Int = 2, lr: Double = 0.025,
+                topK: Int = 20, dims: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val ds = 1 to dims
     val toks = docs.select(col(idCol).as("did"),
         posexplode(split(col(textCol), " ")).as(Seq("pos", "tok")))
       .filter(length(col("tok")) > 0)
@@ -2547,111 +2292,6 @@ object Learn {
     // an out-of-vocabulary token must not consume a window slot. The
     // window is per-document (bounded by doc length), and posexplode's
     // pos is unique per doc, so the rank is deterministic.
-    val wt = toks.join(broadcast(vocab), "tok")
-      .select(col("did"), col("tok"), col("r"),
-        row_number().over(Window.partitionBy("did").orderBy("pos"))
-          .cast("long").as("pos"))
-    val pairs = wt.as("a").join(wt.as("b"),
-        col("a.did") === col("b.did") &&
-          col("b.pos") >= col("a.pos") - window &&
-          col("b.pos") <= col("a.pos") + window &&
-          col("b.pos") =!= col("a.pos"))
-      .select(col("a.tok").as("cw"), col("a.r").as("rc"),
-        col("b.tok").as("ct"), col("b.r").as("rx"))
-      .withColumn("rn", (col("rc") + (col("rx") * 7) + 3) % vsize)
-    val init = vocab.selectExpr("tok", "r", s"$w2vHashExpr AS h")
-      .selectExpr(Seq("tok", "r") ++
-        w2vInitExprs.map { case (c, e) => s"$e AS $c" }: _*)
-      .localCheckpoint()
-    val scored = pairs
-      .join(broadcast(init.select(col("tok").as("cw"), col("u1q"), col("u2q"))), "cw")
-      .join(broadcast(init.select(col("tok").as("ct"),
-        col("v1q").as("p1q"), col("v2q").as("p2q"))), "ct")
-      .join(broadcast(init.select(col("r").as("rn"),
-        col("v1q").as("n1q"), col("v2q").as("n2q"))), "rn")
-      .selectExpr("cw", "ct", "rn", "u1q", "u2q", "p1q", "p2q", "n1q", "n2q",
-        s"${w2vSigmoidExpr("(u1q * p1q) + (u2q * p2q)")} AS sp",
-        s"${w2vSigmoidExpr("(u1q * n1q) + (u2q * n2q)")} AS sn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val du = scored.groupBy("cw")
-      .agg(sum(((lit(1000000L) - col("sp")) * col("p1q")) - (col("sn") * col("n1q"))).as("g1"),
-        sum(((lit(1000000L) - col("sp")) * col("p2q")) - (col("sn") * col("n2q"))).as("g2"))
-    val dvPos = scored.groupBy(col("ct").as("tok"))
-      .agg(sum((lit(1000000L) - col("sp")) * col("u1q")).as("gp1"),
-        sum((lit(1000000L) - col("sp")) * col("u2q")).as("gp2"))
-    val dvNeg = scored.join(broadcast(init.select(col("r").as("rn"), col("tok"))), "rn")
-      .groupBy("tok")
-      .agg(sum(-(col("sn") * col("u1q"))).as("gn1"),
-        sum(-(col("sn") * col("u2q"))).as("gn2"))
-    val vin = init.join(du.withColumnRenamed("cw", "tok"), Seq("tok"), "left")
-      .na.fill(0L, Seq("g1", "g2"))
-      .selectExpr("tok", "r",
-        s"${w2vUpdExpr("u1q", "g1", lr)} AS u1q",
-        s"${w2vUpdExpr("u2q", "g2", lr)} AS u2q")
-    val vout = init.join(dvPos, Seq("tok"), "left").join(dvNeg, Seq("tok"), "left")
-      .na.fill(0L, Seq("gp1", "gp2", "gn1", "gn2"))
-      .selectExpr("tok", "r",
-        s"${w2vUpdExpr("v1q", "(gp1 + gn1)", lr)} AS v1q",
-        s"${w2vUpdExpr("v2q", "(gp2 + gn2)", lr)} AS v2q")
-    val out = vin.join(vout.drop("r"), "tok")
-      .filter(col("r") < topK)
-      .selectExpr("tok", "r + 1 AS rnk", "u1q", "u2q", "v1q", "v2q")
-    scored.unpersist()
-    out
-  }
-
-  // ---- general-dimension word2vec (reference mllib/feature/Word2Vec
-  // .scala:41 — `vectorSize` is the model's headline parameter, default
-  // 100; the member above fixes 2 components). The dim axis is
-  // GENERATED (the s105/alsRank discipline): per-component init residue
-  // mixes, fold-left dot products, and per-component gradient sums whose
-  // dims = 2 instantiation reproduces [[word2vec]] byte-identically
-  // (LearnSpec pins the fitted vectors). The hierarchical-softmax
-  // deviation stays declared — a Huffman path is a per-word
-  // variable-length traversal neither engine can unroll generically —
-  // and this row shows the OTHER declared fixed axis is not
-  // load-bearing. -------------------------------------------------------
-
-  /** Per-component init residue mixes: component 1 of each side is the
-    * positive popularity direction, components ≥ 2 sign-diverse spreads
-    * on side-distinct coprime moduli — the dims = 2 slice is
-    * [[w2vInitExprs]] string-for-string. */
-  def w2vInitExprsD(dims: Int): Seq[(String, String)] = {
-    require(dims >= 2 && dims <= 4, s"w2vInitExprsD: dims $dims outside [2, 4]")
-    val uMods = Vector(7, 5, 3, 11)
-    val vMods = Vector(5, 7, 11, 3)
-    def side(prefix: String, mods: Vector[Int]): Seq[(String, String)] =
-      (1 to dims).map { i =>
-        if (i == 1) s"${prefix}1q" -> s"CAST(65536 + ((h % ${mods(0)}) * 8192) AS BIGINT)"
-        else {
-          val m = mods(i - 1)
-          s"$prefix${i}q" -> s"CAST(((h % $m) - ${(m - 1) / 2}) * 16384 AS BIGINT)"
-        }
-      }
-    side("u", uMods) ++ side("v", vMods)
-  }
-
-  private def w2vDot(a: Seq[String], b: Seq[String]): String =
-    a.zip(b).map { case (x, y) => s"($x * $y)" }.reduce((p, q) => s"$p + $q")
-
-  /** [[word2vec]] with `dims` vector components — identical vocabulary,
-    * pair extraction, negative-rank residue, objective and update
-    * machinery; only the component loops widen. Returns
-    * (tok, rnk, u1q..u{dims}q, v1q..v{dims}q). */
-  def word2vecD(docs: DataFrame, idCol: String, textCol: String,
-                vocabN: Int = 30, window: Int = 2, lr: Double = 0.025,
-                topK: Int = 20, dims: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ds = 1 to dims
-    val toks = docs.select(col(idCol).as("did"),
-        posexplode(split(col(textCol), " ")).as(Seq("pos", "tok")))
-      .filter(length(col("tok")) > 0)
-    val vocab = toks.groupBy("tok").agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("tok")).limit(vocabN)
-      .select(col("tok"), (row_number().over(
-        Window.orderBy(col("c").desc, col("tok"))) - 1).cast("long").as("r"))
-      .localCheckpoint()
-    val vsize = vocab.count()
     val wt = toks.join(broadcast(vocab), "tok")
       .select(col("did"), col("tok"), col("r"),
         row_number().over(Window.partitionBy("did").orderBy("pos"))
@@ -2826,7 +2466,7 @@ object Learn {
     * iteration (constant plan depth — the pregel discipline). */
   def aftFit2(feats: DataFrame, iters: Int = 3, step: Double = 2e-4): DataFrame = {
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
+    // r21: lazy-chained like [[logisticFitK]]
     var p = aftInit(f.sparkSession).localCheckpoint(false)
     for (t <- 1 to iters)
       p = aftStep(f, p, step).localCheckpoint(t == iters)

@@ -58,7 +58,7 @@ object Ml {
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("u"), col("l_suppkey").as("i"))
         .agg(least(lit(5L), count(lit(1))).as("r"))
-      val (users, items) = Recommend.als(ratings, iters = 2)
+      val (users, items) = Recommend.alsRank(ratings, rank = 2, iters = 2)
       Recommend.recommendTop1(ratings, users.filter(col("u") <= 300), items)
         .orderBy("u")
     },
@@ -75,7 +75,7 @@ object Ml {
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("u"), col("l_suppkey").as("i"))
         .agg(least(lit(5L), count(lit(1))).as("r"))
-      val (users, items) = Recommend.als(ratings, iters = 2)
+      val (users, items) = Recommend.alsRank(ratings, rank = 2, iters = 2)
       Recommend.recommendTopK(users.filter(col("u") <= 300), items, k = 3)
         .orderBy("u", "rnk")
     },
@@ -94,7 +94,7 @@ object Ml {
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("u"), col("l_suppkey").as("i"))
         .agg(least(lit(5L), count(lit(1))).as("r"))
-      val (_, items) = Recommend.alsImplicit(ratings, iters = 2, alpha = 40L)
+      val (_, items) = Recommend.alsImplicitRank(ratings, rank = 2, iters = 2, alpha = 40L)
       items.select("i", "f1q", "f2q").orderBy("i")
     },
 
@@ -123,14 +123,12 @@ object Ml {
 
     // General-rank ALS (reference mllib/recommendation/ALS.scala:59 —
     // `rank` is the API's FIRST parameter, default 10; s12/s47/s89 fix
-    // rank = 2 for the closed Cramer form): rank 3 over the same
-    // purchase matrix, each per-key 3×3 SPD ridge solve run as
-    // Recommend.alsSolveLayersK's generated Gaussian-elimination
-    // projection layers (the Solve.scala machinery applied PER KEY —
-    // every row of the sums table is its own system; no per-key LAPACK,
-    // one codegen projection chain per half-step). RecommendSpec pins
-    // the rank-2 slice equal to s12's Cramer machinery half-step by
-    // half-step. Emits the item factor table, gating the full chain.
+    // rank = 2): rank 3 over the same purchase matrix, each per-key 3×3
+    // SPD ridge solve run as Recommend.alsSolveLayersK's generated
+    // Gaussian-elimination projection layers (the Solve.scala machinery
+    // applied PER KEY — every row of the sums table is its own system;
+    // no per-key LAPACK, one codegen projection chain per half-step).
+    // Emits the item factor table, gating the full chain.
     "s109_als_rank" -> { (s, dir) =>
       val ratings = Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir),
@@ -146,8 +144,7 @@ object Ml {
     // fixes rank = 2, s109 generalizes the explicit mode only): rank 3
     // over the same confidence matrix, the 1-row Gramian + per-key
     // confidence sums feeding the SAME generated elimination layers as
-    // s109 through an a = g + s pre-layer. RecommendSpec pins the
-    // rank-2 slice equal to alsImplicit's quantized state.
+    // s109 through an a = g + s pre-layer.
     "s114_als_implicit_rank" -> { (s, dir) =>
       val ratings = Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir),
@@ -591,18 +588,17 @@ object Ml {
     // base rate). Cohort scoring like s14.
     "s19_logistic_regression" -> { (s, dir) =>
       val feats = lrFeatures(s, dir, 10, 1000000)
-      val w = Learn.logisticFit2(feats, iters = 8, lr = 1.0)
-      Learn.logisticPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      val w = Learn.logisticFitK(feats, d = 2, iters = 8, lr = 1.0)
+      Learn.logisticPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
     // THREE-feature binary logistic regression (reference
     // ml/classification/LogisticRegression fits arbitrary-width
-    // vectors; s19 is the historical 2-feature scaffolding, which
-    // logisticFitK reproduces byte-identically at d = 2, spec-pinned):
-    // the s19 problem plus x3 = o_orderkey % 13 — the very term the
-    // label's threshold mixes in, so the third feature carries REAL
-    // signal the 2-feature model cannot see.
+    // vectors; s19 runs the same kernel at d = 2): the s19 problem plus
+    // x3 = o_orderkey % 13 — the very term the label's threshold mixes
+    // in, so the third feature carries REAL signal the 2-feature model
+    // cannot see.
     "s105_logistic_k" -> { (s, dir) =>
       val feats = lrFeatures(s, dir, 10, 1000000)
         .withColumn("x3", expr("CAST(o_orderkey % 13 AS BIGINT)"))
@@ -624,15 +620,14 @@ object Ml {
         expr("CAST((qty DIV 10) - 10 AS BIGINT)").as("x2"),
         expr("CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 150 THEN 2" +
           " WHEN qty + 5 * (o_orderkey % 13) > 115 THEN 1 ELSE 0 END AS BIGINT)").as("y"))
-      val w = Learn.softmaxFit2(feats, iters = 12, lr = 2.0)
-      Learn.softmaxPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      val w = Learn.softmaxFitK(feats, kTot = 3, iters = 12, lr = 2.0)
+      Learn.softmaxPredictK(feats.filter(col("o_orderkey") <= 4000), w, 3, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
     // FOUR-class softmax regression (reference LogisticRegression
-    // .scala:91 trains K-1 pivoted blocks for ANY numClasses; s87 is
-    // the K = 3 scaffolding, which softmaxFitK reproduces
-    // byte-identically — spec-pinned): four qty bands, twelve ascent
+    // .scala:91 trains K-1 pivoted blocks for ANY numClasses; s87 runs
+    // the same kernel at K = 3): four qty bands, twelve ascent
     // steps, nine exact gradient sums per round, argmax with ties to
     // the smallest class.
     "s107_softmax_k4" -> { (s, dir) =>
@@ -656,7 +651,7 @@ object Ml {
     "s85_sgd_decay_l2" -> { (s, dir) =>
       val feats = lrFeatures(s, dir, 10, 1000000)
       val w = Learn.logisticFitDecayL2(feats, iters = 8, lr0 = 1.0, lambda = 0.001)
-      Learn.logisticPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      Learn.logisticPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
@@ -673,7 +668,7 @@ object Ml {
       val feats = lrFeatures(s, dir, 10, 1000000)
       val w = Learn.logisticFitMiniBatch(feats, "o_orderkey", iters = 8,
         lr = 1.0, batches = 4)
-      Learn.logisticPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      Learn.logisticPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
@@ -687,7 +682,7 @@ object Ml {
     "s50_lbfgs" -> { (s, dir) =>
       val feats = lrFeatures(s, dir, 10, 1000000)
       val w = Learn.lbfgsFit2(feats, iters = 6)
-      Learn.logisticPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      Learn.logisticPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
@@ -700,7 +695,7 @@ object Ml {
     "s20_decision_tree" -> { (s, dir) =>
       val rows = lrFeatures(s, dir, 25, 1)
         .withColumnRenamed("yq", "y")
-      Learn.decisionTree2(rows)._1.orderBy("leaf")
+      Learn.decisionTreeK(rows, nFeats = 2)._1.orderBy("leaf")
     },
 
     // Pre-pruning stopping criteria (reference DecisionTree.scala:736
@@ -718,7 +713,7 @@ object Ml {
       // gains at sf0.01: node 2's best split improves 36.7 milli/row,
       // node 3's 45.4 — the 40-milli floor rejects exactly one, so the
       // pruned tree is 3 leaves (2, 6, 7) where s20 has 4
-      val (leaves, splits) = Learn.decisionTree2(rows,
+      val (leaves, splits) = Learn.decisionTreeK(rows, nFeats = 2,
         minInstancesPerNode = 500L, minGainMilli = 40L)
       leaves.join(splits.selectExpr("node AS leaf_parent", "feat", "thr", "score"),
           expr("leaf DIV 2 = leaf_parent"), "left")
@@ -739,7 +734,7 @@ object Ml {
     "s45_entropy_tree" -> { (s, dir) =>
       val rows = lrFeatures(s, dir, 25, 1)
         .withColumnRenamed("yq", "y")
-      val (leaves, splits) = Learn.decisionTree2(rows, impurity = "entropy")
+      val (leaves, splits) = Learn.decisionTreeK(rows, nFeats = 2, impurity = "entropy")
       leaves.join(splits.selectExpr("node AS leaf_parent", "feat", "thr", "score"),
           expr("leaf DIV 2 = leaf_parent"), "left")
         .selectExpr("leaf", "n", "n_pos", "pred",
@@ -769,7 +764,7 @@ object Ml {
         expr("CAST(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS BIGINT)").as("y"))
       val binned = Learn.binnedFeatures(rows, Seq("x1", "x2"), "o_orderkey",
         maxBins = 8, sampleMod = 4)
-      val (leaves, splits) = Learn.decisionTree2(binned)
+      val (leaves, splits) = Learn.decisionTreeK(binned, nFeats = 2)
       leaves.join(splits.selectExpr("node AS leaf_parent", "feat", "thr", "score"),
           expr("leaf DIV 2 = leaf_parent"), "left")
         .selectExpr("leaf", "n", "n_pos", "pred",
@@ -802,7 +797,7 @@ object Ml {
         expr("CAST(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS BIGINT)").as("y"))
       val binned = Learn.binnedFeatures(rows, Seq("x1", "x2"), "o_orderkey",
         maxBins = 8, sampleMod = 4)
-      val (leaves, splits) = Learn.decisionTree2(binned, maxDepth = 3)
+      val (leaves, splits) = Learn.decisionTreeK(binned, nFeats = 2, maxDepth = 3)
       leaves.join(splits.selectExpr("node AS leaf_parent", "feat", "thr", "score"),
           expr("leaf DIV 2 = leaf_parent"), "left")
         .selectExpr("leaf", "n", "n_pos", "pred",
@@ -813,10 +808,8 @@ object Ml {
     },
 
     // THREE-feature gini tree (reference DecisionTree.scala trains on
-    // arbitrary-width vectors; every other gated tree row runs the
-    // historical 2-feature scaffolding — decisionTreeK generalizes the
-    // feature axis, reproducing the 2-feature machinery byte-identically
-    // at nFeats = 2, LearnSpec-pinned). Per-order features: item count,
+    // arbitrary-width vectors; every other gated tree row runs the same
+    // kernel at nFeats = 2). Per-order features: item count,
     // qty decile, max line price in 20k buckets; all three compete in
     // the same per-node argmax (feat-index tiebreak).
     "s102_tree_3feat" -> { (s, dir) =>
@@ -941,15 +934,14 @@ object Ml {
       val feats = ordersBase(s, dir).select(col("o_orderkey"), col("x1"),
         expr("CAST((qty DIV 10) - 10 AS BIGINT)").as("x2"),
         expr("CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1 ELSE -1 END AS BIGINT)").as("ys"))
-      val w = Learn.svmFit2(feats, iters = 8, lr = 0.5)
-      Learn.svmPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      val w = Learn.svmFitK(feats, d = 2, iters = 8, lr = 0.5)
+      Learn.svmPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
     // THREE-feature linear SVM (reference SVMWithSGD fits
-    // arbitrary-width vectors; svmFitK reproduces the 2-feature
-    // machinery byte-identically at d = 2, spec-pinned): the s27
-    // problem plus the CENTERED x3 = (o_orderkey % 13) - 6 — the
+    // arbitrary-width vectors; s27 runs the same kernel at d = 2): the
+    // s27 problem plus the CENTERED x3 = (o_orderkey % 13) - 6 — the
     // label's own noise term, real margin signal the 2-feature
     // violator set cannot use.
     "s106_svm_k" -> { (s, dir) =>
@@ -971,7 +963,7 @@ object Ml {
         expr("CAST((qty DIV 10) - 10 AS BIGINT)").as("x2"),
         expr("CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1 ELSE -1 END AS BIGINT)").as("ys"))
       val w = Learn.svmFitL2(feats, iters = 8, lr = 0.5, lambda = 0.01)
-      Learn.svmPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      Learn.svmPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
@@ -1117,23 +1109,21 @@ object Ml {
     // Multilayer perceptron, 2-2-1 (reference ml/ann/Layer.scala affine
     // + sigmoid stack via FeedForwardTopology.multiLayerPerceptron:319,
     // driven by ml/classification/MultilayerPerceptronClassifier
-    // .scala:154 — mechanics and declared deviations on Learn.mlpStep):
+    // .scala:154 — mechanics and declared deviations on Learn.mlpStepDh):
     // two full-batch quantized backprop steps on the s19 problem, then
     // cohort scoring with the hidden activations gated alongside the
     // output.
     "s44_mlp" -> { (s, dir) =>
-      Learn.mlpFitPredict(lrFeatures(s, dir, 10, 1000000L), iters = 2,
-        lr = 1.0, "o_orderkey", 2000L)
+      Learn.mlpFitPredictDh(lrFeatures(s, dir, 10, 1000000L), d = 2, h = 2,
+        iters = 2, lr = 1.0, "o_orderkey", 2000L)
     },
 
     // General (d, h) multilayer perceptron (reference ml/ann/Layer.scala
     // stacks ARBITRARY layers; MultilayerPerceptronClassifier takes
     // layers: Array[Int] — s44 is the fixed 2-2-1 slice): a 3-3-1 net
-    // over the s19 base plus a third orderkey-residue feature, generated
-    // layer text whose (2, 2) instantiation is byte-identical to the
-    // legacy strings (MlpDhSpec pins text AND fitted output; the spec
-    // also shows 3-3-1 learning an x1 xor x3 parity the 2-2-1 net
-    // cannot see). Two backprop steps, cohort scoring with all three
+    // over the s19 base plus a third orderkey-residue feature, the same
+    // generated layer text as s44 (MlpDhSpec shows 3-3-1 learning an
+    // x1 xor x3 parity the 2-2-1 net cannot see). Two backprop steps, cohort scoring with all three
     // hidden activations gated.
     "s112_mlp_dh" -> { (s, dir) =>
       val feats = ordersBase(s, dir).select(col("o_orderkey"), col("x1"),
@@ -1390,9 +1380,12 @@ object Ml {
 
   /** One unrolled ALS half-step as a CTE: solve `solveKey`'s rank-2 ridge
     * normal equation against the `other` factor table — five exact BIGINT
-    * sums (CAST from DuckDB's HUGEINT), then the Cramer solve with every
-    * constant pinned ::DOUBLE and the exact parenthesization of
-    * graft.ext.Recommend.solveSide, re-quantized to 2^16 units. */
+    * sums (CAST from DuckDB's HUGEINT), then the closed-form Cramer solve
+    * with every constant pinned ::DOUBLE, re-quantized to 2^16 units.
+    * The Spark side (graft.ext.Recommend.alsRank at rank 2) solves the
+    * same SPD system through generated elimination layers — a different
+    * IEEE op order whose ulp differences the 2^16 quantization after
+    * every solve absorbs, so the factor tables agree exactly. */
   /** Implicit-ALS half-step mirror: the 1-row YᵀY Gramian over the
     * other-side factors plus the per-key α·r confidence sums, the same
     * Cramer parenthesization as [[alsSolveCte]] with A = (G + S)/Q². */
@@ -1707,7 +1700,7 @@ object Ml {
        |    CAST(sum(yq - pq) AS BIGINT) AS g0,
        |    CAST(sum((yq - pq) * x1) AS BIGINT) AS g1,
        |    CAST(sum((yq - pq) * x2) AS BIGINT) AS g2
-       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExpr} AS pq
+       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExprK(2)} AS pq
        |        FROM f$p CROSS JOIN ${p}w${k - 1})),
        |${p}w$k AS MATERIALIZED (
        |  SELECT ${Learn.lrUpdExpr("w0q", "g0", lr)} AS w0q,
@@ -1731,7 +1724,7 @@ object Ml {
        |    CAST(sum(yq - pq) AS BIGINT) AS gs0,
        |    CAST(sum((yq - pq) * x1) AS BIGINT) AS gs1,
        |    CAST(sum((yq - pq) * x2) AS BIGINT) AS gs2
-       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExpr} AS pq
+       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExprK(2)} AS pq
        |        FROM feats CROSS JOIN lb${k - 1})),
        |lb$k AS MATERIALIZED (
        |  SELECT $upd
@@ -1748,7 +1741,7 @@ object Ml {
        |    CAST(sum(yq - pq) AS BIGINT) AS g0,
        |    CAST(sum((yq - pq) * x1) AS BIGINT) AS g1,
        |    CAST(sum((yq - pq) * x2) AS BIGINT) AS g2
-       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExpr} AS pq
+       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExprK(2)} AS pq
        |        FROM (SELECT * FROM feats WHERE ($h + ${k - 1}) % $batches = 0)
        |        CROSS JOIN sw${k - 1})),
        |sw$k AS MATERIALIZED (
@@ -1764,7 +1757,7 @@ object Ml {
        |    CAST(sum(yq - pq) AS BIGINT) AS g0,
        |    CAST(sum((yq - pq) * x1) AS BIGINT) AS g1,
        |    CAST(sum((yq - pq) * x2) AS BIGINT) AS g2
-       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExpr} AS pq
+       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExprK(2)} AS pq
        |        FROM feats CROSS JOIN w${k - 1})),
        |w$k AS MATERIALIZED (
        |  SELECT ${Learn.lrUpdExpr("w0q", "g0", lr)} AS w0q,
@@ -1795,7 +1788,7 @@ object Ml {
 
   /** One unrolled decision-tree level: histogram -> prefix-sum candidate
     * table -> exact milli-unit Gini-complement argmax -> node routing
-    * (graft.ext.Learn.decisionTree2's per-level shape verbatim). `p`
+    * (graft.ext.Learn.decisionTreeK's per-level shape verbatim). `p`
     * prefixes every CTE name so the random-forest oracle can instantiate
     * one chain per tree. */
   private def dtLevelCte(p: String, k: Int, score: String =
@@ -2072,14 +2065,14 @@ object Ml {
   private def gbtTerm(b: String): String =
     s"(CASE WHEN (CASE WHEN $b.feat = 1 THEN c.x1 ELSE c.x2 END) <= $b.thr THEN $b.leftq ELSE $b.rightq END)"
 
-  /** One unrolled SVM hinge step (Learn.svmGradTerm/svmUpdExpr shared
+  /** One unrolled SVM hinge step (Learn.svmGradTermK/svmUpdExpr shared
     * verbatim — the integer margin test and the one double update). */
   private def svmL2IterCte(k: Int, lr: Double, lambda: Double): String =
     s"""zg$k AS MATERIALIZED (
        |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(${Learn.svmGradTerm("")}) AS BIGINT) AS g0,
-       |    CAST(sum(${Learn.svmGradTerm(" * x1")}) AS BIGINT) AS g1,
-       |    CAST(sum(${Learn.svmGradTerm(" * x2")}) AS BIGINT) AS g2
+       |    CAST(sum(${Learn.svmGradTermK(2, "")}) AS BIGINT) AS g0,
+       |    CAST(sum(${Learn.svmGradTermK(2, " * x1")}) AS BIGINT) AS g1,
+       |    CAST(sum(${Learn.svmGradTermK(2, " * x2")}) AS BIGINT) AS g2
        |  FROM feats CROSS JOIN zw${k - 1}),
        |zw$k AS MATERIALIZED (
        |  SELECT ${Learn.svmUpdL2Expr("w0q", "g0", lr, lambda)} AS w0q,
@@ -2090,9 +2083,9 @@ object Ml {
   private def svmIterCte(k: Int, lr: Double): String =
     s"""vg$k AS MATERIALIZED (
        |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(${Learn.svmGradTerm("")}) AS BIGINT) AS g0,
-       |    CAST(sum(${Learn.svmGradTerm(" * x1")}) AS BIGINT) AS g1,
-       |    CAST(sum(${Learn.svmGradTerm(" * x2")}) AS BIGINT) AS g2
+       |    CAST(sum(${Learn.svmGradTermK(2, "")}) AS BIGINT) AS g0,
+       |    CAST(sum(${Learn.svmGradTermK(2, " * x1")}) AS BIGINT) AS g1,
+       |    CAST(sum(${Learn.svmGradTermK(2, " * x2")}) AS BIGINT) AS g2
        |  FROM feats CROSS JOIN vw${k - 1}),
        |vw$k AS MATERIALIZED (
        |  SELECT ${Learn.svmUpdExpr("w0q", "g0", lr)} AS w0q,
@@ -2663,8 +2656,8 @@ object Ml {
          |lb0 AS (SELECT $zeros),
          |$iters
          |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label,
-         |  ${Learn.lrProbExpr} AS p_micro,
-         |  CAST(CASE WHEN ${Learn.lrProbExpr} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
+         |  ${Learn.lrProbExprK(2)} AS p_micro,
+         |  CAST(CASE WHEN ${Learn.lrProbExprK(2)} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
          |FROM feats CROSS JOIN lb6 WHERE o_orderkey <= 4000
          |ORDER BY o_orderkey""".stripMargin
     },
@@ -2676,8 +2669,8 @@ object Ml {
          |w0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q),
          |$iters
          |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label,
-         |  ${Learn.lrProbExpr} AS p_micro,
-         |  CAST(CASE WHEN ${Learn.lrProbExpr} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
+         |  ${Learn.lrProbExprK(2)} AS p_micro,
+         |  CAST(CASE WHEN ${Learn.lrProbExprK(2)} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
          |FROM feats CROSS JOIN w8 WHERE o_orderkey <= 4000
          |ORDER BY o_orderkey""".stripMargin
     },
@@ -2762,8 +2755,8 @@ object Ml {
            |    CAST(sum(e2) AS BIGINT) AS g02, CAST(sum(e2 * x1) AS BIGINT) AS g12,
            |    CAST(sum(e2 * x2) AS BIGINT) AS g22
            |  FROM (SELECT x1, x2,
-           |      CAST(CASE WHEN y = 1 THEN 1000000 ELSE 0 END AS BIGINT) - ${Learn.smProbExpr(1)} AS e1,
-           |      CAST(CASE WHEN y = 2 THEN 1000000 ELSE 0 END AS BIGINT) - ${Learn.smProbExpr(2)} AS e2
+           |      CAST(CASE WHEN y = 1 THEN 1000000 ELSE 0 END AS BIGINT) - ${Learn.smProbExprK(1, 3)} AS e1,
+           |      CAST(CASE WHEN y = 2 THEN 1000000 ELSE 0 END AS BIGINT) - ${Learn.smProbExprK(2, 3)} AS e2
            |    FROM mfeats CROSS JOIN mw${k - 1})),
            |mw$k AS MATERIALIZED (
            |  SELECT $upds
@@ -2781,7 +2774,7 @@ object Ml {
          |$iters,
          |scored AS (
          |  SELECT o_orderkey, CAST(y AS BIGINT) AS label,
-         |    ${Learn.smProbExpr(1)} AS p1_micro, ${Learn.smProbExpr(2)} AS p2_micro
+         |    ${Learn.smProbExprK(1, 3)} AS p1_micro, ${Learn.smProbExprK(2, 3)} AS p2_micro
          |  FROM mfeats CROSS JOIN mw12 WHERE o_orderkey <= 4000)
          |SELECT o_orderkey, label,
          |  CAST(1000000 - (p1_micro + p2_micro) AS BIGINT) AS p0_micro,
@@ -2801,7 +2794,7 @@ object Ml {
            |    CAST(sum(yq - pq) AS BIGINT) AS g0,
            |    CAST(sum((yq - pq) * x1) AS BIGINT) AS g1,
            |    CAST(sum((yq - pq) * x2) AS BIGINT) AS g2
-           |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExpr} AS pq
+           |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExprK(2)} AS pq
            |        FROM feats CROSS JOIN dw${k - 1})),
            |dw$k AS MATERIALIZED (
            |  SELECT ${Learn.lrUpdDecayL2Expr("w0q", "g0", 1.0, k, 0.001)} AS w0q,
@@ -2814,8 +2807,8 @@ object Ml {
          |dw0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q),
          |$iters
          |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label,
-         |  ${Learn.lrProbExpr} AS p_micro,
-         |  CAST(CASE WHEN ${Learn.lrProbExpr} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
+         |  ${Learn.lrProbExprK(2)} AS p_micro,
+         |  CAST(CASE WHEN ${Learn.lrProbExprK(2)} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
          |FROM feats CROSS JOIN dw8 WHERE o_orderkey <= 4000
          |ORDER BY o_orderkey""".stripMargin
     },
@@ -2829,8 +2822,8 @@ object Ml {
          |sw0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q),
          |$iters
          |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label,
-         |  ${Learn.lrProbExpr} AS p_micro,
-         |  CAST(CASE WHEN ${Learn.lrProbExpr} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
+         |  ${Learn.lrProbExprK(2)} AS p_micro,
+         |  CAST(CASE WHEN ${Learn.lrProbExprK(2)} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
          |FROM feats CROSS JOIN sw8 WHERE o_orderkey <= 4000
          |ORDER BY o_orderkey""".stripMargin
     },
@@ -3063,7 +3056,7 @@ object Ml {
          |ORDER BY leaf""".stripMargin
     },
 
-    // Mirror of binnedFeatures + decisionTree2: the hash sample, the
+    // Mirror of binnedFeatures + decisionTreeK: the hash sample, the
     // per-feature rank order statistics at (cnt·b) // 8, the
     // min-threshold-≥-value bin mapping (a join aggregate standing in
     // for the Spark side's collected CASE — same values), then the
@@ -3264,10 +3257,10 @@ object Ml {
     // Mirror of the MLP: two unrolled backprop iterations sharing every
     // forward/delta/update formula string, then the scoring projection.
     "s44_mlp" -> {
-      val h1 = Learn.mlpHiddenExpr("w10q", "w11q", "w12q")
-      val h2 = Learn.mlpHiddenExpr("w20q", "w21q", "w22q")
+      val h1 = Learn.mlpHiddenExprDh(1, 2)
+      val h2 = Learn.mlpHiddenExprDh(2, 2)
       val initSel = Seq(0L, 65536L, -65536L, 0L, -65536L, 65536L, 0L, 65536L, 65536L)
-        .zip(Learn.mlpWeightCols)
+        .zip(Learn.mlpWeightColsDh(2, 2))
         .map { case (v, c) => s"CAST($v AS BIGINT) AS $c" }.mkString(", ")
       val iters = (1 to 2).map { k =>
         s"""mfwd$k AS MATERIALIZED (
@@ -3275,7 +3268,7 @@ object Ml {
            |    ${Learn.mlpHidDeltaExpr("v1q", "h1")} AS dh1,
            |    ${Learn.mlpHidDeltaExpr("v2q", "h2")} AS dh2
            |  FROM (SELECT x1, x2, h1, h2, v1q, v2q,
-           |          yq - ${Learn.mlpOutExpr} AS dlt
+           |          yq - ${Learn.mlpOutExprH(2)} AS dlt
            |        FROM (SELECT f.*, w.*, $h1 AS h1, $h2 AS h2
            |              FROM feats f CROSS JOIN mw${k - 1} w))),
            |mg$k AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -3306,7 +3299,7 @@ object Ml {
          |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label, h1, h2,
          |  o_micro,
          |  CAST(CASE WHEN o_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
-         |FROM (SELECT o_orderkey, yq, h1, h2, ${Learn.mlpOutExpr} AS o_micro
+         |FROM (SELECT o_orderkey, yq, h1, h2, ${Learn.mlpOutExprH(2)} AS o_micro
          |      FROM (SELECT f.*, w.*, $h1 AS h1, $h2 AS h2
          |            FROM (SELECT * FROM feats WHERE o_orderkey <= 2000) f
          |            CROSS JOIN mw2 w))
@@ -3379,7 +3372,7 @@ object Ml {
         (Seq(label) ++ (1 to 4).map(k => lrIterCteP(s"c$c", k, 1.0))).mkString(",\n")
       }.mkString(",\n")
       val scoreUnion = classes.map { c =>
-        s"""  SELECT o_orderkey, cls, CAST($c AS BIGINT) AS mcls, ${Learn.lrProbExpr} AS p_micro
+        s"""  SELECT o_orderkey, cls, CAST($c AS BIGINT) AS mcls, ${Learn.lrProbExprK(2)} AS p_micro
            |  FROM (SELECT * FROM fx WHERE o_orderkey <= 2000) CROSS JOIN c${c}w4""".stripMargin
       }.mkString("\n  UNION ALL\n")
       s"""WITH $ordersBaseCte,

@@ -153,14 +153,16 @@ object MlEval {
 
     // Lasso (reference mllib/regression/Lasso.scala:88 + optimization/
     // Updater.scala L1Updater): 8 ISTA iterations — full-batch squared-
-    // loss gradient step + integer soft-threshold — on the s19 feature
+    // loss gradient step + integer soft-threshold (elastic net at
+    // alpha = 1) — on the s19 feature
     // base against the qty-derived noisy target (w2 converges toward the
     // true slope 10; the L1 shrink visibly bites w1). The support
     // decision (which weights hit exactly zero) is an integer compare,
     // so it cannot drift between engines. Cohort scoring like s14.
     "s33_lasso" -> { (s, dir) =>
       val feats = lassoFeats(s, dir)
-      val w = graft.ext.Learn.lassoFit2(feats, iters = 8, lr = 0.002, lambda = 20.0)
+      val w = graft.ext.Learn.elasticNetFit2(feats, iters = 8, lr = 0.002,
+        lambda = 20.0, alpha = 1.0)
       graft.ext.Learn.linPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
         .orderBy("o_orderkey")
     },
@@ -234,22 +236,20 @@ object MlEval {
     // Word2Vec.scala:41 — minCount-pruned vocabulary :139, ±window
     // center/context pairs :320, sigmoid gradient steps :340; the
     // negative-sampling objective and the other declared deviations in
-    // Learn.word2vec's scaladoc): top-30 vocabulary over documents, one
-    // full-batch quantized step, the joined in/out vectors for the 20
-    // most frequent tokens.
+    // Learn.word2vecD's section comment): top-30 vocabulary over
+    // documents, 2-component vectors, one full-batch quantized step, the
+    // joined in/out vectors for the 20 most frequent tokens.
     "s48_word2vec" -> { (s, dir) =>
-      graft.ext.Learn.word2vec(Tables.documents(s, dir), "doc_id", "text",
-          vocabN = 30, window = 2, lr = 0.025, topK = 20)
+      graft.ext.Learn.word2vecD(Tables.documents(s, dir), "doc_id", "text",
+          vocabN = 30, window = 2, lr = 0.025, topK = 20, dims = 2)
         .orderBy("rnk")
     },
 
     // General-dimension word2vec (reference mllib/feature/Word2Vec
     // .scala:41 — vectorSize is the model's headline parameter, default
     // 100; s48 fixes 2): the same skip-gram negative-sampling chain at
-    // dims = 3, component loops generated, dims = 2 slice byte-identical
-    // to s48's machinery (LearnSpec pins the fitted vectors). The
-    // hierarchical-softmax deviation stays declared; this row closes
-    // the vector-dimension axis.
+    // dims = 3. The hierarchical-softmax deviation stays declared; this
+    // row closes the vector-dimension axis.
     "s113_word2vec_dim" -> { (s, dir) =>
       graft.ext.Learn.word2vecD(Tables.documents(s, dir), "doc_id", "text",
           vocabN = 30, window = 2, lr = 0.025, topK = 20, dims = 3)
@@ -992,8 +992,8 @@ object MlEval {
          |WHERE rn <= 8 ORDER BY topic, rnk""".stripMargin
     },
 
-    // Mirror of Learn.word2vec: positional pairs, rank-hash negative,
-    // the shared sigmoid / init / update formula strings (ascii and
+    // Mirror of Learn.word2vecD at dims = 2: positional pairs, rank-hash
+    // negative, the shared sigmoid / init / update formula strings (ascii and
     // substring behave identically in both engines on these tokens).
     // Mirror of Learn.word2vecD at dims = 3: the s48 chain with
     // generated component loops (same init/sigmoid/update strings).
@@ -1053,7 +1053,7 @@ object MlEval {
 
     "s48_word2vec" -> {
       import graft.ext.Learn
-      val initCols = Learn.w2vInitExprs
+      val initCols = Learn.w2vInitExprsD(2)
         .map { case (c, e) => s"$e AS $c" }.mkString(", ")
       s"""WITH toks AS MATERIALIZED (
          |  SELECT did, i AS pos, toks[i] AS tok FROM (

@@ -310,7 +310,7 @@ object Streams {
     // gradient update per micro-batch, the model held on the driver
     // between batches): per-event features (user residue, value decile)
     // with a purchase label, the events file as one micro-batch through
-    // foreachBatch, weights updated by graft.ext.Learn.logisticStep —
+    // foreachBatch, weights updated by graft.ext.Learn.logisticStepK —
     // the identical quantized step s19's batch loop uses, so the oracle
     // is one unrolled iteration over the same features.
     // Streaming linear regression (reference mllib/regression/
@@ -490,7 +490,7 @@ object Streams {
         "CAST(user_id % 10 AS BIGINT) AS x1",
         "CAST(CAST(round(value) AS BIGINT) DIV 10 AS BIGINT) AS x2",
         "CAST(round(value) AS BIGINT) AS y")
-      var w = graft.ext.Learn.logisticInit(s).localCheckpoint()
+      var w = graft.ext.Learn.logisticInitK(s, 2).localCheckpoint()
       val q = feats.writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           w = graft.ext.Learn.linearStep(b, w, lr = 0.05).localCheckpoint()
@@ -505,10 +505,10 @@ object Streams {
         "CAST(user_id % 10 AS BIGINT) AS x1",
         "CAST(CAST(round(value) AS BIGINT) DIV 10 AS BIGINT) AS x2",
         "CAST(CASE WHEN event_type = 'purchase' THEN 1000000 ELSE 0 END AS BIGINT) AS yq")
-      var w = graft.ext.Learn.logisticInit(s).localCheckpoint()
+      var w = graft.ext.Learn.logisticInitK(s, 2).localCheckpoint()
       val q = feats.writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          w = graft.ext.Learn.logisticStep(b, w, lr = 1.0).localCheckpoint()
+          w = graft.ext.Learn.logisticStepK(b, w, 2, lr = 1.0).localCheckpoint()
         }
         .start()
       try q.processAllAvailable() finally q.stop()

@@ -253,14 +253,14 @@ class LearnSpec extends SparkSpec {
       val (g1, g2) = du(t); val (gv1, gv2) = dv(t)
       (t, rank(t) + 1, upd(u1, g1), upd(u2, g2), upd(v1, gv1), upd(v2, gv2))
     }
-    val got = Learn.word2vec(docs, "doc_id", "text", vocabN = 30, topK = 20)
+    val got = Learn.word2vecD(docs, "doc_id", "text", vocabN = 30, topK = 20, dims = 2)
       .orderBy("rnk").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
     assert(got.toSeq === want)
     // partitioning determinism
-    val a = Learn.word2vec(docs.repartition(1), "doc_id", "text").orderBy("rnk").collect()
-    val b = Learn.word2vec(docs.repartition(7, col("doc_id")), "doc_id", "text")
+    val a = Learn.word2vecD(docs.repartition(1), "doc_id", "text", dims = 2).orderBy("rnk").collect()
+    val b = Learn.word2vecD(docs.repartition(7, col("doc_id")), "doc_id", "text", dims = 2)
       .orderBy("rnk").collect()
     assert(a.toSeq === b.toSeq)
   }
@@ -270,20 +270,31 @@ class LearnSpec extends SparkSpec {
     val docs = Seq((1L, "a b c"), (2L, "b d e"), (3L, "a c e a"),
       (4L, "d c b"), (5L, "e a d b"))
       .toDF("doc_id", "text")
-    // init text at dims = 2 is the legacy Seq string-for-string
-    assert(Learn.w2vInitExprsD(2) === Learn.w2vInitExprs)
-    val legacy = Learn.word2vec(docs, "doc_id", "text", vocabN = 30, topK = 20)
-      .orderBy("rnk").collect().toSeq
+    // golden pin: the init text and fitted vectors the fixed 2-component
+    // word2vec produced on this fixture before it was folded into
+    // word2vecD (its init Seq verbatim, its (tok, rnk, u1q, u2q, v1q,
+    // v2q) rows recorded from it)
+    assert(Learn.w2vInitExprsD(2) === Seq(
+      "u1q" -> "CAST(65536 + ((h % 7) * 8192) AS BIGINT)",
+      "u2q" -> "CAST(((h % 5) - 2) * 16384 AS BIGINT)",
+      "v1q" -> "CAST(65536 + ((h % 5) * 8192) AS BIGINT)",
+      "v2q" -> "CAST(((h % 7) - 3) * 16384 AS BIGINT)"))
     val d2 = Learn.word2vecD(docs, "doc_id", "text", vocabN = 30, topK = 20, dims = 2)
       .orderBy("rnk").collect().toSeq
-    assert(d2 === legacy)
+    val legacy = d2.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getLong(4), r.getLong(5)))
+    assert(legacy === Seq(("a", 1L, 91734L, 18101L, 76507L, 30682L),
+      ("b", 2L, 56637L, -19398L, 64181L, -49546L),
+      ("c", 3L, 71101L, 31791L, 79722L, -16342L),
+      ("d", 4L, 88693L, -2838L, 68608L, 17475L),
+      ("e", 5L, 102607L, -31984L, 57529L, 50202L)))
     // dims = 3: same vocabulary/ranks, wider vectors, every third
     // component live (the sign-diverse init leaves it nonzero for some
     // token, and the update machinery touches it)
     val d3 = Learn.word2vecD(docs, "doc_id", "text", vocabN = 30, topK = 20, dims = 3)
       .orderBy("rnk").collect()
     assert(d3.map(r => (r.getString(0), r.getLong(1))).toSeq ===
-      legacy.map(r => (r.getString(0), r.getLong(1))))
+      legacy.map(r => (r._1, r._2)))
     assert(d3.length === legacy.length && d3.head.length === 8)
     assert(d3.exists(_.getLong(4) !== 0L), "u3q must carry signal")
     intercept[IllegalArgumentException](
@@ -383,7 +394,7 @@ class LearnSpec extends SparkSpec {
       (i, i % 3, (i % 10) - 5, if ((i % 10) - 5 >= 0) 1000000L else 0L)
     }
     val feats = raw.toDF("id", "x1", "x2", "yq")
-    val w = Learn.logisticFit2(feats, iters = 8, lr = 1.0)
+    val w = Learn.logisticFitK(feats, d = 2, iters = 8, lr = 1.0)
     val wr = w.head()
     val got = (wr.getLong(0), wr.getLong(1), wr.getLong(2))
     // scalar mirror of the identical arithmetic: Math.exp IS Spark's exp,
@@ -405,7 +416,7 @@ class LearnSpec extends SparkSpec {
     }
     assert(got === mw)
     assert(got._3 > 0, "must learn the separating direction")
-    val scored = Learn.logisticPredict2(feats, w, "id").collect()
+    val scored = Learn.logisticPredictK(feats, w, 2, "id").collect()
     val acc = scored.count(r => r.getLong(3) == r.getLong(1)).toDouble / scored.length
     assert(acc === 1.0, s"separable fixture must fully separate, got $acc")
   }
@@ -419,12 +430,12 @@ class LearnSpec extends SparkSpec {
     // zero history -> sy = 0 -> the curvature guard must route iteration 1
     // through the identical plain ascent step
     val one = Learn.lbfgsFit2(feats, iters = 1, step = 0.5, lr0 = 1.0).head()
-    val gd = Learn.logisticStep(feats, Learn.logisticInit(spark), lr = 1.0).head()
+    val gd = Learn.logisticStepK(feats, Learn.logisticInitK(spark, 2), 2, lr = 1.0).head()
     assert((one.getLong(0), one.getLong(1), one.getLong(2)) ===
       ((gd.getLong(0), gd.getLong(1), gd.getLong(2))))
     // after 6 iterations the separable boundary is learned
     val w = Learn.lbfgsFit2(feats, iters = 6)
-    val scored = Learn.logisticPredict2(feats, w, "id").collect()
+    val scored = Learn.logisticPredictK(feats, w, 2, "id").collect()
     val acc = scored.count(r => r.getLong(1) === r.getLong(3)).toDouble / scored.length
     assert(acc >= 0.95, s"lbfgs should separate the fixture, accuracy $acc")
     // partitioning determinism of the full staged two-loop
@@ -460,8 +471,8 @@ class LearnSpec extends SparkSpec {
     val feats = (1L to 200L).map { i =>
       (i, i % 5, (i * 7) % 23, if ((i * 3) % 11 > 5) 1000000L else 0L)
     }.toDF("id", "x1", "x2", "yq")
-    val a = Learn.logisticFit2(feats.repartition(1), iters = 4).head()
-    val b = Learn.logisticFit2(feats.repartition(13, col("x2")), iters = 4).head()
+    val a = Learn.logisticFitK(feats.repartition(1), d = 2, iters = 4).head()
+    val b = Learn.logisticFitK(feats.repartition(13, col("x2")), d = 2, iters = 4).head()
     assert(a === b)
   }
 
@@ -469,7 +480,7 @@ class LearnSpec extends SparkSpec {
     import spark.implicits._
     val rows = Seq((1L, 10L, 1L), (1L, 20L, 1L), (2L, 10L, 1L),
       (2L, 20L, 0L), (3L, 10L, 0L), (3L, 20L, 0L)).toDF("x1", "x2", "y")
-    val (leaves, splits) = Learn.decisionTree2(rows)
+    val (leaves, splits) = Learn.decisionTreeK(rows, nFeats = 2)
     val sp = splits.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     // root: feat1<=1 scores (4+0)*1000/2 + (1+9)*1000/4 = 4500 and
@@ -496,7 +507,7 @@ class LearnSpec extends SparkSpec {
       (i, i % 3, (i % 10) - 5, if ((i % 10) - 5 >= 0) 1L else -1L)
     }
     val feats = raw.toDF("id", "x1", "x2", "ys")
-    val w = Learn.svmFit2(feats, iters = 8, lr = 0.5)
+    val w = Learn.svmFitK(feats, d = 2, iters = 8, lr = 0.5)
     val wr = w.head()
     // scalar mirror of the identical arithmetic: integer margin test,
     // half-away-from-zero quantized update
@@ -515,7 +526,7 @@ class LearnSpec extends SparkSpec {
       mw = (upd(mw._1, g0), upd(mw._2, g1), upd(mw._3, g2))
     }
     assert((wr.getLong(0), wr.getLong(1), wr.getLong(2)) === mw)
-    val scored = Learn.svmPredict2(feats, w, "id").collect()
+    val scored = Learn.svmPredictK(feats, w, 2, "id").collect()
     val acc = scored.count(r => r.getLong(3) == r.getLong(1)).toDouble / scored.length
     assert(acc === 1.0, s"separable svm must fully separate, got $acc")
   }
@@ -525,8 +536,8 @@ class LearnSpec extends SparkSpec {
     val feats = (1L to 200L).map { i =>
       (i, i % 5, ((i * 7) % 23) - 11, if ((i * 3) % 11 > 5) 1L else -1L)
     }.toDF("id", "x1", "x2", "ys")
-    val a = Learn.svmFit2(feats.repartition(1), iters = 4).head()
-    val b = Learn.svmFit2(feats.repartition(13, col("x2")), iters = 4).head()
+    val a = Learn.svmFitK(feats.repartition(1), d = 2, iters = 4).head()
+    val b = Learn.svmFitK(feats.repartition(13, col("x2")), d = 2, iters = 4).head()
     assert(a === b)
   }
 
@@ -610,7 +621,7 @@ class LearnSpec extends SparkSpec {
       (0L, 0L, 0L), (0L, 1L, 0L), (1L, 0L, 0L), (1L, 1L, 0L),
       (2L, 0L, 1L), (2L, 1L, 1L), (3L, 0L, 1L), (3L, 1L, 1L))
       .toDF("x1", "x2", "y")
-    val (leaves, splits) = Learn.decisionTree2(rows, maxDepth = 1, impurity = "entropy")
+    val (leaves, splits) = Learn.decisionTreeK(rows, nFeats = 2, maxDepth = 1, impurity = "entropy")
     val root = splits.head()
     assert((root.getLong(1), root.getLong(2)) === ((1L, 1L))) // feat 1, thr 1
     assert(root.getLong(3) === 0L)                            // perfect: 0 milli-nats
@@ -618,7 +629,7 @@ class LearnSpec extends SparkSpec {
     assert(lv.map(r => (r.getLong(0), r.getLong(3))).toSeq === Seq((2L, 0L), (3L, 1L)))
     // hand-check a NON-perfect score: splitting 8 rows (4 pos) on x2 <= 0
     // gives two (2 pos / 2 neg) children: score = 4·ln(1/2)·2 rounded
-    val (_, s2) = Learn.decisionTree2(rows.withColumn("x1", lit(0L)),
+    val (_, s2) = Learn.decisionTreeK(rows.withColumn("x1", lit(0L)), nFeats = 2,
       maxDepth = 1, impurity = "entropy")
     val r2 = s2.head()
     assert(r2.getLong(1) === 2L)
@@ -721,18 +732,18 @@ class LearnSpec extends SparkSpec {
         (r * 4 + 3L, 1L, 0L, 1000000L), (r * 4 + 4L, 1L, 1L, 0L))
     }.toDF("id", "x1", "x2", "yq")
     def loss(iters: Int): Long =
-      Learn.mlpFitPredict(xor, iters, lr = 8.0, "id", 1000L)
+      Learn.mlpFitPredictDh(xor, 2, 2, iters, lr = 8.0, "id", 1000L)
         .selectExpr("sum(abs((label * 1000000) - o_micro)) AS l").head().getLong(0)
     val l0 = loss(0)
     val l40 = loss(40)
     assert(l40 < l0)
     // at init the output really is constant 731059
-    val init = Learn.mlpFitPredict(xor, 0, 8.0, "id", 1000L)
+    val init = Learn.mlpFitPredictDh(xor, 2, 2, 0, 8.0, "id", 1000L)
       .select("o_micro").distinct().collect().map(_.getLong(0)).toSeq
     assert(init === Seq(731059L))
     // the quantized chain is bit-identical under any partitioning
-    val a = Learn.mlpFitPredict(xor.repartition(1), 3, 8.0, "id", 1000L).collect()
-    val b = Learn.mlpFitPredict(xor.repartition(7, col("x2")), 3, 8.0, "id", 1000L).collect()
+    val a = Learn.mlpFitPredictDh(xor.repartition(1), 2, 2, 3, 8.0, "id", 1000L).collect()
+    val b = Learn.mlpFitPredictDh(xor.repartition(7, col("x2")), 2, 2, 3, 8.0, "id", 1000L).collect()
     assert(a.toSeq === b.toSeq)
   }
 
@@ -944,11 +955,11 @@ class LearnSpec extends SparkSpec {
       val x2 = i % 20
       (i, (i % 2) * 2 - 1, x2, 7L * x2)
     }.toDF("o_orderkey", "x1", "x2", "y")
-    val w = Learn.lassoFit2(feats, iters = 12, lr = 0.01, lambda = 30.0).head()
+    val w = Learn.elasticNetFit2(feats, iters = 12, lr = 0.01, lambda = 30.0, alpha = 1.0).head()
     assert(w.getLong(1) === 0L, s"noise weight must be EXACTLY zero, got $w")
     assert(math.abs(w.getLong(2) / 65536.0 - 7.0) < 0.7, s"signal weight survives: $w")
     // scoring emits integer predictions in y-units
-    val p = Learn.linPredict2(feats, Learn.lassoFit2(feats, 12, 0.01, 30.0), "o_orderkey")
+    val p = Learn.linPredict2(feats, Learn.elasticNetFit2(feats, 12, 0.01, 30.0, 1.0), "o_orderkey")
       .orderBy("o_orderkey").head()
     assert(p.schema.fieldNames.toSeq === Seq("o_orderkey", "y", "predq"))
   }
@@ -1034,10 +1045,12 @@ class LearnSpec extends SparkSpec {
       val z = (i % 9) + (i * 7) % 13
       (i, i % 9 - 4, (i * 7) % 13 - 6, if (z > 13) 2L else if (z > 8) 1L else 0L)
     }.toDF("o_orderkey", "x1", "x2", "y")
-    val w3 = Learn.softmaxFit2(three.select("x1", "x2", "y"), iters = 5, lr = 1.0).head()
+    // golden pin: the weight blocks (w01q, w11q, w21q, w02q, w12q, w22q)
+    // the fixed K = 3 softmaxFit2 fitted on this fixture before it was
+    // folded into softmaxFitK
     val wk = Learn.softmaxFitK(three.select("x1", "x2", "y"), kTot = 3,
       iters = 5, lr = 1.0).head()
-    assert(w3 === wk)
+    assert(wk.toSeq === Seq(22300L, 34314L, 17313L, -28414L, 57802L, 104037L))
     // 4 bands of a separable score: every class must appear in the
     // predictions and accuracy must clear the dominant-class rate
     val four = (1L to 400L).map { i =>
@@ -1064,9 +1077,10 @@ class LearnSpec extends SparkSpec {
     val two = (1L to 300L).map { i =>
       (i % 9 - 4, (i * 7) % 13 - 6, if ((i % 9) + (i * 7) % 13 > 10) 1L else -1L)
     }.toDF("x1", "x2", "ys")
-    val w2 = Learn.svmFit2(two, iters = 5, lr = 0.5).head()
+    // golden pin: the (w0q, w1q, w2q) the 2-feature svmFit2 fitted on
+    // this fixture before it was folded into svmFitK
     val wk = Learn.svmFitK(two, d = 2, iters = 5, lr = 0.5).head()
-    assert(w2 === wk)
+    assert(wk.toSeq === Seq(-10267L, 69796L, 67502L))
     // the label is a pure sign function of x3 (centered): the d = 3
     // hinge must separate ~perfectly; x1/x2 are uncorrelated noise
     val three = (1L to 400L).map { i =>
@@ -1082,15 +1096,14 @@ class LearnSpec extends SparkSpec {
 
   test("logisticFitK: d = 2 is bit-identical to logisticFit2; the third feature separates") {
     import spark.implicits._
-    // d = 2 equality: the generated probability/update text reproduces
-    // the historical machinery byte-identically, so the fitted weight
-    // STATES agree exactly, not just predictions
+    // d = 2 golden pin: the fitted weight STATE (w0q, w1q, w2q) the
+    // 2-feature logisticFit2 produced on this fixture before it was
+    // folded into logisticFitK — exact, not just predictions
     val two = (1L to 300L).map { i =>
       (i % 9, (i * 7) % 13, if ((i % 9) + (i * 7) % 13 > 10) 1000000L else 0L)
     }.toDF("x1", "x2", "yq")
-    val w2 = Learn.logisticFit2(two, iters = 5, lr = 1.0).head()
     val wk = Learn.logisticFitK(two, d = 2, iters = 5, lr = 1.0).head()
-    assert(w2 === wk)
+    assert(wk.toSeq === Seq(-64339L, -83607L, -10407L))
     // a label that is a pure function of x3: the d = 3 fit must push
     // weight onto x3 and classify ~perfectly where the 2-feature fit
     // (blind to x3) cannot beat the base rate
@@ -1154,16 +1167,19 @@ class LearnSpec extends SparkSpec {
     val ls = leaves.orderBy("leaf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(ls.toSeq === Seq((2L, 100L, 100L), (3L, 100L, 0L)), s"pure leaves: ${ls.toSeq}")
-    // the generalization is conservative: at nFeats = 2 the generated
-    // stack/route text is byte-identical to the historical 2-feature
-    // machinery, so the fitted trees agree exactly
+    // nFeats = 2 golden pin: the leaves (leaf, n, n_pos, pred) and splits
+    // (node, feat, thr, score) the 2-feature decisionTree2 fitted on this
+    // fixture before it was folded into decisionTreeK
     val two = (1L to 300L).map { i =>
       (i % 7, (i * 5) % 11, if ((i % 7) * 2 + (i * 5) % 11 > 9) 1L else 0L)
     }.toDF("x1", "x2", "y")
-    val (l2, s2) = Learn.decisionTree2(two, maxDepth = 2)
     val (lk, sk) = Learn.decisionTreeK(two, nFeats = 2, maxDepth = 2)
-    assert(l2.orderBy("leaf").collect().toSeq === lk.orderBy("leaf").collect().toSeq)
-    assert(s2.orderBy("node").collect().toSeq === sk.orderBy("node").collect().toSeq)
+    assert(lk.orderBy("leaf").collect().map(_.toSeq).toSeq === Seq(
+      Seq(4L, 94L, 8L, 0L), Seq(5L, 34L, 27L, 1L),
+      Seq(6L, 31L, 15L, 0L), Seq(7L, 141L, 134L, 1L)))
+    assert(sk.orderBy("node").collect().map(_.toSeq).toSeq === Seq(
+      Seq(1L, 1L, 2L, 209291L), Seq(2L, 2L, 7L, 102243L),
+      Seq(3L, 2L, 1L, 143211L)))
   }
 
   test("depth 3 provably differs from depth 2: the third level purifies the striped band") {
@@ -1177,7 +1193,7 @@ class LearnSpec extends SparkSpec {
       (x1, 0L, if ((x1 > 10 && x1 <= 20) || (x1 > 30 && x1 <= 40)) 1L else 0L)
     }.toDF("x1", "x2", "y")
     def leaves(depth: Int) =
-      Learn.decisionTree2(rows, maxDepth = depth)._1.collect()
+      Learn.decisionTreeK(rows, nFeats = 2, maxDepth = depth)._1.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     val l2 = leaves(2)
     val l3 = leaves(3)
@@ -1186,7 +1202,7 @@ class LearnSpec extends SparkSpec {
     // level-synchronous refinement: depth 3's first two generations ARE
     // depth 2's, so its split set strictly extends depth 2's with
     // third-generation nodes (ids >= 4)
-    def splits(depth: Int) = Learn.decisionTree2(rows, maxDepth = depth)._2
+    def splits(depth: Int) = Learn.decisionTreeK(rows, nFeats = 2, maxDepth = depth)._2
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val (s2, s3) = (splits(2), splits(3))
     assert(s2.subsetOf(s3) && s3.size > s2.size, s"$s2 vs $s3")
@@ -1219,12 +1235,13 @@ class LearnSpec extends SparkSpec {
       val (x1, x2) = (i % 5, (i * 3) % 7 - 3)
       (i, x1, x2, 1000L * (2 * x1 - x2))
     }.toDF("o_orderkey", "x1", "x2", "y").select("x1", "x2", "y")
-    // alpha = 1: bit-identical to lassoFit2 (the step expr degenerates
-    // to the bare soft-threshold, not a rounded division by 1.0)
-    val l = Learn.lassoFit2(feats, iters = 8, lr = 0.01, lambda = 10.0).head()
+    // alpha = 1: golden pin of the (w0q, w1q, w2q) the standalone lasso
+    // fit produced on this fixture before it was folded in here (the step
+    // expr degenerates to the bare soft-threshold, not a rounded division
+    // by 1.0)
     val e1 = Learn.elasticNetFit2(feats, iters = 8, lr = 0.01, lambda = 10.0,
       alpha = 1.0).head()
-    assert(e1 === l)
+    assert(e1.toSeq === Seq(16214228L, 49526754L, -17136305L))
     // alpha = 0: the ISTA fixed point solves (X'X + n*lambda*I)b = X'y —
     // ridgeFit2's closed form at the SAME lambda
     val e0 = Learn.elasticNetFit2(feats, iters = 120, lr = 0.15, lambda = 0.05,
@@ -1258,13 +1275,13 @@ class LearnSpec extends SparkSpec {
     // pure-left). The split moving 37 -> 50 is binning on the gated path.
     val rows = (1L to 100L).map(i => (i, i, 0L, if (i <= 37) 1L else 0L))
       .toDF("id", "x1", "x2", "y")
-    val rawThr = Learn.decisionTree2(rows, maxDepth = 1)._2.head()
+    val rawThr = Learn.decisionTreeK(rows, nFeats = 2, maxDepth = 1)._2.head()
     assert(rawThr.getLong(1) === 1L && rawThr.getLong(2) === 37L)
     val binned = Learn.binnedFeatures(rows, Seq("x1", "x2"), "id", maxBins = 4)
     // x1 collapsed to the 3 edges + sentinel; x2's single value binned to 0
     assert(binned.select("x1").distinct().collect().map(_.getLong(0)).sorted
       === Array(25L, 50L, 75L, Learn.binSentinel))
-    val binThr = Learn.decisionTree2(binned, maxDepth = 1)._2.head()
+    val binThr = Learn.decisionTreeK(binned, nFeats = 2, maxDepth = 1)._2.head()
     assert(binThr.getLong(1) === 1L && binThr.getLong(2) === 50L)
     // thresholds are exact order statistics at (cnt*b) DIV maxBins
     val lf = rows.selectExpr("id", "stack(2, 1L, x1, 2L, x2) AS (feat, val)")
@@ -1301,12 +1318,12 @@ class LearnSpec extends SparkSpec {
     val ordered = rows.selectExpr(
       "CAST(CASE cat WHEN 'a' THEN 1 WHEN 'b' THEN 2 ELSE 3 END AS BIGINT) AS x1",
       "x2", "y")
-    val ordScore = Learn.decisionTree2(ordered, maxDepth = 1)._2
+    val ordScore = Learn.decisionTreeK(ordered, nFeats = 2, maxDepth = 1)._2
       .head().getLong(3)
     val centroid = rows.join(
         Learn.centroidCategoryRanks(rows, "cat", "y").select("cat", "crank"), "cat")
       .selectExpr("crank AS x1", "x2", "y")
-    val catScore = Learn.decisionTree2(centroid, maxDepth = 1)._2
+    val catScore = Learn.decisionTreeK(centroid, nFeats = 2, maxDepth = 1)._2
       .head().getLong(3)
     assert(catScore > ordScore,
       s"centroid split ($catScore) must beat the ordered best ($ordScore)")
@@ -1423,13 +1440,13 @@ class LearnSpec extends SparkSpec {
     // the argmax falls back to thr 8
     val rows = (1L to 10L).map(i => (i, 0L, if (i == 10) 1L else 0L))
       .toDF("x1", "x2", "y")
-    val free = Learn.decisionTree2(rows, maxDepth = 1)._2.head()
+    val free = Learn.decisionTreeK(rows, nFeats = 2, maxDepth = 1)._2.head()
     assert(free.getLong(2) === 9L)
-    val floored = Learn.decisionTree2(rows, maxDepth = 1,
+    val floored = Learn.decisionTreeK(rows, nFeats = 2, maxDepth = 1,
       minInstancesPerNode = 2L)._2.head()
     assert(floored.getLong(2) === 8L)
     // an impossible gain floor leaves the root unsplit: a 1-leaf tree
-    val (leaves, splits) = Learn.decisionTree2(rows, maxDepth = 1,
+    val (leaves, splits) = Learn.decisionTreeK(rows, nFeats = 2, maxDepth = 1,
       minGainMilli = 1000000L)
     assert(splits.count() === 0L)
     assert(leaves.collect().map(_.getLong(0)).toSeq === Seq(1L))
@@ -1442,14 +1459,14 @@ class LearnSpec extends SparkSpec {
       val x2 = (i % 15) - 7 // -7..7
       (i, i % 3, x2, if (x2 <= -3) 0L else if (x2 <= 2) 1L else 2L)
     }.toDF("id", "x1", "x2", "y")
-    val w = Learn.softmaxFit2(feats, iters = 20, lr = 2.0)
-    val scored = Learn.softmaxPredict2(feats, w, "id").collect()
+    val w = Learn.softmaxFitK(feats, kTot = 3, iters = 20, lr = 2.0)
+    val scored = Learn.softmaxPredictK(feats, w, 3, "id").collect()
     val acc = scored.count(r => r.getLong(5) === r.getLong(1)).toDouble / scored.length
     assert(acc >= 0.95, s"softmax accuracy $acc")
     // p0 is the EXACT integer complement on every row
     assert(scored.forall(r => r.getLong(2) + r.getLong(3) + r.getLong(4) === 1000000L))
     // partitioning-deterministic
-    val w2 = Learn.softmaxFit2(feats.repartition(7), iters = 20, lr = 2.0)
+    val w2 = Learn.softmaxFitK(feats.repartition(7), kTot = 3, iters = 20, lr = 2.0)
     assert(w2.head().toSeq === w.head().toSeq)
   }
 
@@ -1463,7 +1480,7 @@ class LearnSpec extends SparkSpec {
     assert(math.abs(wL.getLong(2)) < math.abs(w0.getLong(2)), // x2 carries the boundary
       s"l2 did not shrink: ${w0.getLong(2)} -> ${wL.getLong(2)}")
     // the sqrt(t) decay genuinely diverges from the constant-step fit
-    val wConst = Learn.logisticFit2(feats, iters = 8, lr = 1.0).head()
+    val wConst = Learn.logisticFitK(feats, d = 2, iters = 8, lr = 1.0).head()
     assert(w0.toSeq !== wConst.toSeq)
   }
 
@@ -1474,12 +1491,12 @@ class LearnSpec extends SparkSpec {
       .map(i => (i, i % 3, (i % 10) - 5, if ((i % 10) - 5 >= 0) 1000000L else 0L))
       .toDF("id", "x1", "x2", "yq")
     val wMb = Learn.logisticFitMiniBatch(feats, "id", iters = 8, lr = 1.0, batches = 4)
-    val scored = Learn.logisticPredict2(feats, wMb, "id").collect()
+    val scored = Learn.logisticPredictK(feats, wMb, 2, "id").collect()
     val acc = scored.count(r => r.getLong(3) === r.getLong(1)).toDouble / scored.length
     assert(acc >= 0.9, s"minibatch accuracy $acc")
     // quarter-batch gradients are not the full-batch gradients: the
     // stochastic trajectory must land on different quantized weights
-    val wFull = Learn.logisticFit2(feats, iters = 8, lr = 1.0).head()
+    val wFull = Learn.logisticFitK(feats, d = 2, iters = 8, lr = 1.0).head()
     assert(wMb.head().toSeq !== wFull.toSeq)
     // deterministic: the same rotation reproduces the same weights
     val again = Learn.logisticFitMiniBatch(feats.repartition(5), "id", 8, 1.0, 4)
@@ -1493,9 +1510,9 @@ class LearnSpec extends SparkSpec {
     val rows = (1L to 100L)
       .map(i => (i, i % 50, (i * 7) % 100, if (i % 50 < 25 && (i * 7) % 100 < 50) 1L else 0L))
       .toDF("id", "x1", "x2", "y")
-    val (_, full) = Learn.decisionTree2(rows)
+    val (_, full) = Learn.decisionTreeK(rows, nFeats = 2)
     assert(full.collect().map(_.getLong(1)).toSet === Set(1L, 2L)) // both used
-    val (_, restricted) = Learn.decisionTree2(rows.withColumn("x2", lit(0L)))
+    val (_, restricted) = Learn.decisionTreeK(rows.withColumn("x2", lit(0L)), nFeats = 2)
     val feats = restricted.collect().map(_.getLong(1)).toSet
     assert(feats === Set(1L), s"restricted tree split on $feats")
   }

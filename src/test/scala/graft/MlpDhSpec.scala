@@ -2,8 +2,9 @@ package graft
 
 import graft.ext.Learn
 
-/** General (d, h) MLP pins: the generated layer text must reproduce the
-  * legacy 2-2-1 machinery exactly at (2, 2), and a 3-3-1 net must
+/** General (d, h) MLP pins: at (2, 2) the generated layer text and the
+  * fitted scoring output must equal the golden values recorded from the
+  * fixed 2-2-1 net it replaced, and a 3-3-1 net must
   * separate a parity fixture whose signal lives on the third feature
   * interaction — a shape the 2-2-1 net cannot express. */
 class MlpDhSpec extends SparkSpec {
@@ -32,20 +33,35 @@ class MlpDhSpec extends SparkSpec {
   }
 
   test("(2, 2) reproduces the legacy mlpFitPredict output exactly") {
-    val legacy = Learn.mlpFitPredict(feats2, iters = 3, lr = 1.0, "o_orderkey", 400L)
-      .collect().toSeq
+    // golden pin recorded from the fixed 2-2-1 mlpFitPredict on this
+    // fixture: the first rows of (id, label, h1, h2, o_micro, pred), the
+    // column sums, and an MD5 over every row
     val gen = Learn.mlpFitPredictDh(feats2, d = 2, h = 2, iters = 3, lr = 1.0,
-      "o_orderkey", 400L).collect().toSeq
-    assert(gen === legacy)
+      "o_orderkey", 400L).collect().toSeq.map(_.toSeq.map(_.asInstanceOf[Long]))
+    assert(gen.length === 400)
+    assert(gen.take(3) === Seq(
+      Seq(1L, 0L, 12633L, 972117L, 585705L, 1L),
+      Seq(2L, 0L, 809939L, 11475L, 471193L, 0L),
+      Seq(3L, 1L, 59467L, 959381L, 589096L, 1L)))
+    assert((1 until 6).map(j => gen.map(_(j)).sum) ===
+      Seq(184L, 198187137L, 200133451L, 216728809L, 243L))
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(gen.map(_.mkString(",")).mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    assert(md5 === "3998dd8a1263a0db8841895ead7a5f24")
   }
 
   test("generated (2, 2) text is byte-identical to the legacy strings") {
-    assert(Learn.mlpWeightColsDh(2, 2) === Learn.mlpWeightCols)
+    assert(Learn.mlpWeightColsDh(2, 2) ===
+      Seq("w10q", "w11q", "w12q", "w20q", "w21q", "w22q", "v0q", "v1q", "v2q"))
     assert(Learn.mlpInitValsDh(2, 2) ===
       Seq(0L, 65536L, -65536L, 0L, -65536L, 65536L, 0L, 65536L, 65536L))
-    assert(Learn.mlpHiddenExprDh(1, 2) === Learn.mlpHiddenExpr("w10q", "w11q", "w12q"))
-    assert(Learn.mlpHiddenExprDh(2, 2) === Learn.mlpHiddenExpr("w20q", "w21q", "w22q"))
-    assert(Learn.mlpOutExprH(2) === Learn.mlpOutExpr)
+    assert(Learn.mlpHiddenExprDh(1, 2) ===
+      "CAST(round(1000000.0 / (1.0 + exp(-(CAST(((w10q + (w11q * x1)) + (w12q * x2)) AS DOUBLE) / 65536.0)))) AS BIGINT)")
+    assert(Learn.mlpHiddenExprDh(2, 2) ===
+      "CAST(round(1000000.0 / (1.0 + exp(-(CAST(((w20q + (w21q * x1)) + (w22q * x2)) AS DOUBLE) / 65536.0)))) AS BIGINT)")
+    assert(Learn.mlpOutExprH(2) ===
+      "CAST(round(1000000.0 / (1.0 + exp(-(CAST(((v0q * 1000000) + ((v1q * h1) + (v2q * h2))) AS DOUBLE) / 65536000000.0)))) AS BIGINT)")
   }
 
   test("3-3-1 separates the x1 xor x3 parity; a 2-feature net cannot") {
@@ -57,9 +73,9 @@ class MlpDhSpec extends SparkSpec {
     val accWide = wide.count(r => r.getLong(6) === r.getLong(1)).toDouble / wide.length
     assert(accWide > 0.8, s"3-3-1 must learn most of the planted xor: acc $accWide")
     // the same rows through the 2-2-1 net (x3 unseen): stuck near chance
-    val narrow = Learn.mlpFitPredict(
-      featsXor.select("o_orderkey", "x1", "x2", "yq"), iters = 150, lr = 4.0,
-      "o_orderkey", 480L).collect()
+    val narrow = Learn.mlpFitPredictDh(
+      featsXor.select("o_orderkey", "x1", "x2", "yq"), d = 2, h = 2,
+      iters = 150, lr = 4.0, "o_orderkey", 480L).collect()
     val accNarrow = narrow.count(r => r.getLong(5) === r.getLong(1)).toDouble / narrow.length
     assert(accNarrow < 0.6, s"2-2-1 cannot see the xor signal: acc $accNarrow")
     intercept[IllegalArgumentException](

@@ -24,7 +24,7 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("als completes every user's held-out in-block item as the top recommendation") {
-    val (users, items) = Recommend.als(ratings, iters = 4)
+    val (users, items) = Recommend.alsRank(ratings, rank = 2, iters = 4)
     val rec = Recommend.recommendTop1(ratings, users, items)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // each user's unrated block partner must beat all cross-block items
@@ -33,7 +33,7 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("recommendTopK scores ALL items (rated included), ranks k per user, exact dot products") {
-    val (users, items) = Recommend.als(ratings, iters = 4)
+    val (users, items) = Recommend.alsRank(ratings, rank = 2, iters = 4)
     val topAll = Recommend.recommendTopK(users, items, k = 100)
       .collect()
     // every (user, item) pair is scored — recommendProducts does NOT
@@ -58,7 +58,7 @@ class RecommendSpec extends SparkSpec {
   test("first user solve matches a driver-side re-derivation exactly (quantized parity)") {
     val Q = Recommend.QuantScale.toDouble
     val lam = Recommend.Lambda
-    // init factors exactly as initItemFactors does
+    // init factors exactly as initFactorExprsK(2, _) does
     def init(i: Long): (Long, Long) =
       (Recommend.QuantScale + (i % 7) * (Recommend.QuantScale / 8),
         ((i % 5) - 2) * (Recommend.QuantScale / 4))
@@ -80,7 +80,7 @@ class RecommendSpec extends SparkSpec {
       u -> (quant(((va22 * vb1) - (va12 * vb2)) / det),
         quant(((va11 * vb2) - (va12 * vb1)) / det))
     }
-    val (users, _) = Recommend.als(ratings, iters = 1)
+    val (users, _) = Recommend.alsRank(ratings, rank = 2, iters = 1)
     // iters=1 runs user-solve(init items) then item-solve; users is the
     // first half-step's output, directly comparable
     val got = users.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -101,7 +101,7 @@ class RecommendSpec extends SparkSpec {
     // the clamp must actually fire: the unconstrained fit on the same
     // data goes negative somewhere (sign-diverse init), so the two
     // factor sets differ
-    val (uu, ui) = Recommend.als(planted, iters = 3)
+    val (uu, ui) = Recommend.alsRank(planted, rank = 2, iters = 3)
     val uuF = uu.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val clampedDiffers =
       uuF != nu.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -130,14 +130,14 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("als factors are deterministic across partitionings") {
-    val (u1, i1) = Recommend.als(ratings.repartition(1), iters = 2)
-    val (u7, i7) = Recommend.als(ratings.repartition(7, col("i")), iters = 2)
+    val (u1, i1) = Recommend.alsRank(ratings.repartition(1), rank = 2, iters = 2)
+    val (u7, i7) = Recommend.alsRank(ratings.repartition(7, col("i")), rank = 2, iters = 2)
     assert(u1.orderBy("u").collect().toSeq === u7.orderBy("u").collect().toSeq)
     assert(i1.orderBy("i").collect().toSeq === i7.orderBy("i").collect().toSeq)
   }
 
   test("recommendTop1 never surfaces an already-rated pair") {
-    val (users, items) = Recommend.als(ratings, iters = 2)
+    val (users, items) = Recommend.alsRank(ratings, rank = 2, iters = 2)
     val rated = ratings.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     Recommend.recommendTop1(ratings, users, items).collect().foreach { r =>
       assert(!rated.contains((r.getLong(0), r.getLong(1))))
@@ -240,8 +240,8 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("alternating solves reduce reconstruction error on the training set") {
-    val (u1, i1) = Recommend.als(ratings, iters = 1)
-    val (u2, i2) = Recommend.als(ratings, iters = 2)
+    val (u1, i1) = Recommend.alsRank(ratings, rank = 2, iters = 1)
+    val (u2, i2) = Recommend.alsRank(ratings, rank = 2, iters = 2)
     def sse(users: org.apache.spark.sql.DataFrame,
             items: org.apache.spark.sql.DataFrame): Double = {
       val q2 = (Recommend.QuantScale * Recommend.QuantScale).toDouble
@@ -285,14 +285,14 @@ class RecommendSpec extends SparkSpec {
       u -> (quant(((va22 * vb1) - (va12 * vb2)) / det),
         quant(((va11 * vb2) - (va12 * vb1)) / det))
     }
-    val (users, _) = Recommend.alsImplicit(ratings, iters = 1, alpha = alpha)
+    val (users, _) = Recommend.alsImplicitRank(ratings, rank = 2, iters = 1, alpha = alpha)
     val got = users.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got === expected)
   }
 
   test("implicit als factors are deterministic across partitionings and score in-block higher") {
-    val (u1, i1) = Recommend.alsImplicit(ratings.repartition(1), iters = 2)
-    val (u7, i7) = Recommend.alsImplicit(ratings.repartition(7, col("i")), iters = 2)
+    val (u1, i1) = Recommend.alsImplicitRank(ratings.repartition(1), rank = 2, iters = 2)
+    val (u7, i7) = Recommend.alsImplicitRank(ratings.repartition(7, col("i")), rank = 2, iters = 2)
     assert(u1.orderBy("u").collect().toSeq === u7.orderBy("u").collect().toSeq)
     assert(i1.orderBy("i").collect().toSeq === i7.orderBy("i").collect().toSeq)
     // user 1 (block A: items 10-12, weak link to 20) must score its
@@ -305,23 +305,32 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("alsRank at rank 2 reproduces the Cramer machinery's quantized state") {
-    // Cramer and the generated elimination layers are the same SPD solve
-    // in reassociated IEEE order; the 2^16 quantization after EVERY solve
-    // absorbs the ulp seam, so the factor tables must match exactly —
-    // per half-step, across the full alternation.
-    val (uC, iC) = Recommend.als(ratings, iters = 4)
+    // golden pin: the factor tables the closed-form rank-2 Cramer ALS
+    // produced on this fixture (iters = 4) before it was folded into
+    // alsRank. Cramer and the generated elimination layers are the same
+    // SPD solve in reassociated IEEE order; the 2^16 quantization after
+    // EVERY solve absorbs the ulp seam, so the states match exactly.
     val (uK, iK) = Recommend.alsRank(ratings, rank = 2, iters = 4)
-    assert(uC.orderBy("u").collect().toSeq === uK.orderBy("u").collect().toSeq)
-    assert(iC.orderBy("i").collect().toSeq === iK.orderBy("i").collect().toSeq)
+    assert(uK.orderBy("u").collect().map(_.toSeq).toSeq === Seq(
+      Seq(1L, 193910L, -13483L), Seq(2L, 164598L, -36313L),
+      Seq(3L, 163727L, 134440L), Seq(4L, 141100L, 138747L),
+      Seq(5L, 151202L, -86687L)))
+    assert(iK.orderBy("i").collect().map(_.toSeq).toSeq === Seq(
+      Seq(10L, 105299L, -95234L), Seq(11L, 102621L, -71260L),
+      Seq(12L, 121075L, -35709L), Seq(20L, 31586L, 118622L),
+      Seq(21L, 49024L, 101473L), Seq(22L, 73430L, 78403L)))
   }
 
   test("initFactorExprsK rank-2 slice equals initItemFactors value-for-value") {
+    // golden pin: the (i, f1q, f2q) rows the fixed rank-2 item init
+    // produced on this fixture before it was folded into initFactorExprsK
     val viaExprs = ratings.select("i").distinct()
       .selectExpr("i" +: Recommend.initFactorExprsK(2, "i"): _*)
-      .orderBy("i").collect().toSeq
-    val legacy = Recommend.initItemFactors(ratings)
-      .orderBy("i").collect().toSeq
-    assert(viaExprs === legacy)
+      .orderBy("i").collect().map(_.toSeq).toSeq
+    assert(viaExprs === Seq(
+      Seq(10L, 90112L, -32768L), Seq(11L, 98304L, -16384L),
+      Seq(12L, 106496L, 0L), Seq(20L, 114688L, -32768L),
+      Seq(21L, 65536L, -16384L), Seq(22L, 73728L, 0L)))
   }
 
   test("alsRank at rank 3 still completes held-out in-block items; guards reject bad args") {
@@ -340,10 +349,18 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("alsImplicitRank at rank 2 reproduces alsImplicit's quantized state; rank 3 scores in-block") {
-    val (uC, iC) = Recommend.alsImplicit(ratings, iters = 2)
+    // golden pin: the factor tables the closed-form rank-2 implicit ALS
+    // produced on this fixture (iters = 2) before it was folded into
+    // alsImplicitRank
     val (uK, iK) = Recommend.alsImplicitRank(ratings, rank = 2, iters = 2)
-    assert(uC.orderBy("u").collect().toSeq === uK.orderBy("u").collect().toSeq)
-    assert(iC.orderBy("i").collect().toSeq === iK.orderBy("i").collect().toSeq)
+    assert(uK.orderBy("u").collect().map(_.toSeq).toSeq === Seq(
+      Seq(1L, 34561L, -39509L), Seq(2L, 47608L, 10879L),
+      Seq(3L, 60427L, 56271L), Seq(4L, 55696L, 27257L),
+      Seq(5L, 47182L, 7108L)))
+    assert(iK.orderBy("i").collect().map(_.toSeq).toSeq === Seq(
+      Seq(10L, 94967L, -25703L), Seq(11L, 93071L, -28091L),
+      Seq(12L, 95671L, -30636L), Seq(20L, 92609L, -23808L),
+      Seq(21L, 84661L, -14358L), Seq(22L, 88249L, -22878L)))
     val (u3, i3) = Recommend.alsImplicitRank(ratings, rank = 3, iters = 2)
     val uf = u3.collect().map(r => r.getLong(0) -> Seq(r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val fi = i3.collect().map(r => r.getLong(0) -> Seq(r.getLong(1), r.getLong(2), r.getLong(3))).toMap

@@ -182,7 +182,19 @@ object Clustering {
     * (argmin-assign, integer-sum) rules the batch path uses. */
   def assignSummary(q: DataFrame,
                     centers: Seq[(Long, Array[Double])]): DataFrame =
-    summarize(q, centers)
+    clusterSummary(q.withColumn("cluster", assignUdf(centers)(col("vq"))))
+
+  /** Per-cluster summary (cluster, n_members, min_member, mean_sqnorm) of
+    * an assigned (vec_id, vq, cluster) frame — exact integer squared
+    * norms, one rounded double mean per cluster. */
+  private def clusterSummary(assigned: DataFrame): DataFrame =
+    assigned.withColumn("sqnorm", expr("aggregate(vq, 0L, (a, x) -> a + x * x)"))
+      .groupBy("cluster")
+      .agg(count(lit(1)).as("n_members"), min("vec_id").as("min_member"),
+        sum("sqnorm").as("ssq"))
+      .select(col("cluster"), col("n_members"), col("min_member"),
+        round(col("ssq").cast("double") / col("n_members") / (QuantScale.toDouble * QuantScale), 4)
+          .as("mean_sqnorm"))
 
   /** One STREAMING k-means micro-batch update (reference
     * mllib/src/main/scala/org/apache/spark/mllib/clustering/
@@ -224,22 +236,10 @@ object Clustering {
     }
   }
 
-  /** Final assignment + per-cluster summary of `q` under `centers`. */
-  private def summarize(q: DataFrame,
-                        centers: Seq[(Long, Array[Double])]): DataFrame =
-    q.withColumn("cluster", assignUdf(centers)(col("vq")))
-      .withColumn("sqnorm", expr("aggregate(vq, 0L, (a, x) -> a + x * x)"))
-      .groupBy("cluster")
-      .agg(count(lit(1)).as("n_members"), min("vec_id").as("min_member"),
-        sum("sqnorm").as("ssq"))
-      .select(col("cluster"), col("n_members"), col("min_member"),
-        round(col("ssq").cast("double") / col("n_members") / (QuantScale.toDouble * QuantScale), 4)
-          .as("mean_sqnorm"))
-
   /** Lloyd over an already-quantized (vec_id, vq) table. */
   def kmeansFrom(vq: DataFrame, dims: Int, k: Int, iters: Int): DataFrame = {
     val q = vq.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = summarize(q, lloydCenters(q, dims, k, iters)).localCheckpoint()
+    val out = assignSummary(q, lloydCenters(q, dims, k, iters)).localCheckpoint()
     q.unpersist()
     out
   }
@@ -257,7 +257,7 @@ object Clustering {
     val q = quantized(df, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centers = lloydCenters(q.filter(col("vec_id") % sampleMod === 0), dims, k, iters)
-    val out = summarize(q, centers).localCheckpoint()
+    val out = assignSummary(q, centers).localCheckpoint()
     q.unpersist()
     out
   }
@@ -342,15 +342,7 @@ object Clustering {
         .drop("sub")
         .localCheckpoint()
     }
-    val out = a
-      .withColumn("sqnorm", expr("aggregate(vq, 0L, (a, x) -> a + x * x)"))
-      .groupBy("cluster")
-      .agg(count(lit(1)).as("n_members"), min("vec_id").as("min_member"),
-        sum("sqnorm").as("ssq"))
-      .select(col("cluster"), col("n_members"), col("min_member"),
-        round(col("ssq").cast("double") / col("n_members") / (QuantScale.toDouble * QuantScale), 4)
-          .as("mean_sqnorm"))
-      .localCheckpoint()
+    val out = clusterSummary(a).localCheckpoint()
     q.unpersist()
     out
   }
@@ -373,102 +365,70 @@ object Clustering {
     centers
   }
 
-  // ---- Gaussian mixture, 1-D two-component EM (reference mllib/
-  // clustering/GaussianMixture.scala:161 run — per EM iteration one
-  // aggregate of per-point responsibility-weighted sums (:198, the
-  // ExpectationSum treeAggregate) then a driver update of weights and
-  // gaussians (:238) — exactly the scan + 1-row-projection loop below.
-  // Thin-slice deviations, declared: one dimension, two components, and
-  // a SHARED variance held fixed at the population variance (the
-  // reference re-fits per-component covariances; a known-common-variance
-  // location mixture keeps the responsibility a pure sigmoid of x, so
-  // the whole E-step shares the s19 sigmoid machinery and quantizes to
-  // exact micro integers) ----------------------------------------------
+  // ---- topic models: shared doc-term prelude and top-terms tail -------
 
-  // ---- topic-model thin-slice (reference mllib/clustering/LDA.scala:46;
-  // the EM path — LDAOptimizer.scala:79 EMLDAOptimizer — re-aggregates
-  // per-edge topic responsibilities over the doc-term graph every
-  // iteration (:150 next, responsibilities from LDA.scala:418
-  // computePTopic), which is exactly the counts ⋈ theta ⋈ phi join +
-  // two groupBys below. DECLARED DEVIATIONS: two topics, PLSA EM (the
-  // alpha = eta → 0 limit — no Dirichlet smoothing), and parity-seeded
-  // doc mixtures: EM needs an asymmetric start to leave the symmetric
-  // fixed point, and the reference's randomized init is exactly what an
-  // oracle gate cannot allow. INTEGER-EXACT throughout: micro-unit
-  // responsibilities make the E-step one integer multiply/divide — not
-  // one double in the whole chain (the p13 standard). Resolution note:
-  // phi lives in micro-units, so vocabularies must stay well under 1e6
-  // tokens (raise the quantization scale beyond that). -------------------
-
-  /** The E-step: topic-1 responsibility of one (doc, word) cell over
-    * (th, p1, p2) in micro-units — pure integer arithmetic; the zero
-    * denominator (a word with zero mass in BOTH topics) falls back to
-    * the uninformative 1/2. */
-  val plsaRespExpr: String =
-    "CAST(CASE WHEN ((th * p1) + ((1000000 - th) * p2)) = 0 THEN 500000 " +
-      "ELSE ((th * p1) * 1000000) DIV ((th * p1) + ((1000000 - th) * p2)) END AS BIGINT)"
-
-  /** Two-topic PLSA over (`idCol`, `textCol`) documents: `iters` EM
-    * iterations, each ONE counts ⋈ theta ⋈ phi join (row-linear in
-    * distinct (doc, word) pairs) plus a per-doc and a per-word hash
-    * aggregate; both state tables localCheckpoint per iteration (the
-    * pregel discipline — theta is doc-scaled, phi vocabulary-bounded).
-    * Returns the top-`topK` words per topic:
-    * (topic, rnk, tok, phi_micro), ties toward the smaller token. */
-  def plsaTopics(docs: DataFrame, idCol: String, textCol: String,
-                 iters: Int = 2, topK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** The (did, tok, c) doc-term counts every topic model fits over:
+    * whitespace tokens exploded per doc, one hash aggregate, persisted
+    * and materialized (the caller unpersists). */
+  private def docTermCounts(docs: DataFrame, idCol: String,
+                            textCol: String): DataFrame = {
     val counts = docs.select(col(idCol).as("did"),
         explode(split(col(textCol), " ")).as("tok"))
       .groupBy("did", "tok").agg(count(lit(1)).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     counts.count()
-    val vocabN = counts.agg(count_distinct(col("tok")).as("vn"))
-    var theta = counts.select("did").distinct()
-      .selectExpr("did", "CAST(250000 + (did % 2) * 500000 AS BIGINT) AS th")
-      .localCheckpoint()
-    var phi = counts.select("tok").distinct()
-      .crossJoin(broadcast(vocabN))
-      .selectExpr("tok", "CAST(1000000 DIV vn AS BIGINT) AS p1",
-        "CAST(1000000 DIV vn AS BIGINT) AS p2")
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val scored = counts.join(theta, "did").join(phi, "tok")
-        .selectExpr("did", "tok", "c", s"$plsaRespExpr AS r")
-        .selectExpr("did", "c", "tok", "r * c AS s1c", "(1000000 - r) * c AS s2c")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      theta = scored.groupBy("did")
-        .agg(sum("s1c").as("sc1"), sum("c").as("sc"))
-        .selectExpr("did", "CAST(sc1 DIV sc AS BIGINT) AS th")
-        .localCheckpoint()
-      val pa = scored.groupBy("tok")
-        .agg(sum("s1c").as("w1"), sum("s2c").as("w2"))
-      val tot = pa.agg(sum("w1").as("t1"), sum("w2").as("t2"))
-      phi = pa.crossJoin(broadcast(tot))
-        .selectExpr("tok", "CAST((w1 * 1000000) DIV t1 AS BIGINT) AS p1",
-          "CAST((w2 * 1000000) DIV t2 AS BIGINT) AS p2")
-        .localCheckpoint()
-      scored.unpersist()
-    }
-    counts.unpersist()
-    phi.select(lit(1L).as("topic"), col("tok"), col("p1").as("phi_micro"))
-      .union(phi.select(lit(2L).as("topic"), col("tok"), col("p2").as("phi_micro")))
-      .select(col("topic"), col("tok"), col("phi_micro"),
-        row_number().over(Window.partitionBy("topic")
-          .orderBy(col("phi_micro").desc, col("tok"))).cast("long").as("rnk"))
-      .filter(col("rnk") <= topK)
-      .select("topic", "rnk", "tok", "phi_micro")
+    counts
   }
 
-  // ---- K-topic PLSA EM (the α = η → 1 limit of the smoothed EM below,
-  // s38's declared model class, generalized over the topic axis with the
-  // [[ldaTopicsK]] discipline: K−1 stored mixtures/responsibilities,
-  // complement columns keep every sum exact, integer-only E-step). ------
+  /** The top-`topK` terms per topic of a (tok, `prefix`1..`prefix`K)
+    * state: the K columns stacked as (topic, tok, `valueCol`), ranked by
+    * value, ties toward the smaller token. Returns
+    * (topic, rnk, tok, `valueCol`). */
+  private def topTermsPerTopic(state: DataFrame, prefix: String, kTot: Int,
+                               valueCol: String, topK: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val topics = (2 to kTot).map(k =>
+        state.select(lit(k.toLong), col("tok"), col(s"$prefix$k")))
+      .foldLeft(state.select(lit(1L).as("topic"), col("tok"),
+        col(s"${prefix}1").as(valueCol)))(_ union _)
+    topics.select(col("topic"), col("tok"), col(valueCol),
+        row_number().over(Window.partitionBy("topic")
+          .orderBy(col(valueCol).desc, col("tok"))).cast("long").as("rnk"))
+      .filter(col("rnk") <= topK)
+      .select("topic", "rnk", "tok", valueCol)
+  }
+
+  // ---- K-topic PLSA EM (reference mllib/clustering/LDA.scala:46, `k`
+  // its headline parameter (:131 setK); the EM path —
+  // LDAOptimizer.scala:79 EMLDAOptimizer — re-aggregates per-edge topic
+  // responsibilities over the doc-term graph every iteration (:150 next,
+  // responsibilities from LDA.scala:418 computePTopic), which is exactly
+  // the counts ⋈ theta ⋈ phi join + two groupBys below. s38 runs K = 2,
+  // s115 K = 3. DECLARED DEVIATIONS: PLSA EM (the α = η → 1 limit of
+  // the smoothed EM below — no Dirichlet smoothing), and parity-seeded
+  // doc mixtures: EM needs an asymmetric start to leave the symmetric
+  // fixed point, and the reference's randomized init is exactly what an
+  // oracle gate cannot allow. K−1 stored mixtures/responsibilities with
+  // complement columns keep every sum exact. INTEGER-EXACT throughout:
+  // micro-unit responsibilities make the E-step one integer
+  // multiply/divide — not one double in the whole chain (the p13
+  // standard). Resolution note: phi lives in micro-units, so
+  // vocabularies must stay well under 1e6 tokens (raise the quantization
+  // scale beyond that). ---------------------------------------------------
+
+  /** The two-topic E-step text the s38 oracle shares: topic-1
+    * responsibility of one (doc, word) cell over (th, p1, p2) in
+    * micro-units — pure integer arithmetic; the zero denominator (a word
+    * with zero mass in BOTH topics) falls back to the uninformative 1/2.
+    * Value-identical to [[plsaRespExprK]] at K = 2. */
+  val plsaRespExpr: String =
+    "CAST(CASE WHEN ((th * p1) + ((1000000 - th) * p2)) = 0 THEN 500000 " +
+      "ELSE ((th * p1) * 1000000) DIV ((th * p1) + ((1000000 - th) * p2)) END AS BIGINT)"
 
   /** Topic-k PLSA responsibility in micro units over the K−1 stored doc
     * mixtures (th1..) and the K emissions (p1..pK) — pure integer
     * arithmetic; a word with zero mass in EVERY topic falls back to the
-    * uniform 1e6 DIV K (the legacy ½ at K = 2). */
+    * uniform 1e6 DIV K (½ at K = 2). */
   def plsaRespExprK(kTot: Int, k: Int): String = {
     val thK = s"(1000000 - ${(1 until kTot).map(j => s"th$j").reduce((a, b) => s"($a + $b)")})"
     def term(j: Int) = if (j < kTot) s"(th$j * p$j)" else s"($thK * p$kTot)"
@@ -477,25 +437,21 @@ object Clustering {
       s"ELSE (${term(k)} * 1000000) DIV $den END AS BIGINT)"
   }
 
-  /** K-topic PLSA over (`idCol`, `textCol`) documents — the
-    * [[plsaTopics]] loop with K−1 stored topics: each iteration ONE
-    * counts ⋈ theta ⋈ phi join plus a per-doc and a per-word hash
-    * aggregate (K−1 and K sum columns respectively); states
-    * localCheckpoint per iteration. Doc mixtures seed by the
-    * [[ldaSeedFracExpr]] K-residue parity (the legacy 250000/750000
-    * values at K = 2). Returns the top-`topK` words per topic. */
+  /** K-topic PLSA over (`idCol`, `textCol`) documents: `iters` EM
+    * iterations, each ONE counts ⋈ theta ⋈ phi join (row-linear in
+    * distinct (doc, word) pairs) plus a per-doc and a per-word hash
+    * aggregate (K−1 and K sum columns respectively); both state tables
+    * localCheckpoint per iteration (the pregel discipline — theta is
+    * doc-scaled, phi vocabulary-bounded). Doc mixtures seed by the
+    * [[ldaSeedFracExpr]] K-residue parity (250000/750000 at K = 2).
+    * Returns the top-`topK` words per topic:
+    * (topic, rnk, tok, phi_micro), ties toward the smaller token. */
   def plsaTopicsK(docs: DataFrame, idCol: String, textCol: String,
                   kTot: Int, iters: Int = 2, topK: Int = 8): DataFrame = {
     require(kTot >= 2 && kTot <= 6, s"plsaTopicsK: K = $kTot outside [2, 6]")
-    import org.apache.spark.sql.expressions.Window
     val ks = 1 until kTot
-    val counts = docs.select(col(idCol).as("did"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .groupBy("did", "tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count()
+    val counts = docTermCounts(docs, idCol, textCol)
     val vocabN = counts.agg(count_distinct(col("tok")).as("vn"))
-    val uni = 1000000 / kTot
     var theta = counts.select("did").distinct()
       .selectExpr("did" +:
         ks.map(k => s"CAST(${ldaSeedFracExpr(kTot, k)} AS BIGINT) AS th$k"): _*)
@@ -531,43 +487,41 @@ object Clustering {
       scored.unpersist()
     }
     counts.unpersist()
-    val topics = (2 to kTot).map(k =>
-        phi.select(lit(k.toLong), col("tok"), col(s"p$k")))
-      .foldLeft(phi.select(lit(1L).as("topic"), col("tok"), col("p1").as("phi_micro")))(_ union _)
-    topics.select(col("topic"), col("tok"), col("phi_micro"),
-        row_number().over(Window.partitionBy("topic")
-          .orderBy(col("phi_micro").desc, col("tok"))).cast("long").as("rnk"))
-      .filter(col("rnk") <= topK)
-      .select("topic", "rnk", "tok", "phi_micro")
+    topTermsPerTopic(phi, "p", kTot, "phi_micro", topK)
   }
 
-  // ---- smoothed LDA EM (reference mllib/clustering/LDA.scala:418
+  // ---- K-topic smoothed LDA EM (reference mllib/clustering/LDA.scala:418
   // computePTopic — γ_wjk ∝ (N_wk + η−1)(N_jk + α−1)/(N_k + W(η−1)) —
   // driven by LDAOptimizer.scala:150 next(): E-step scales γ by the
   // token count N_wj, M-step re-aggregates expected counts per doc
-  // vertex, per term vertex and globally. This is the reference's
-  // ACTUAL EM (s38's PLSA is its α = η → 1 limit, a declared
-  // deviation; this closes it): the state is EXPECTED COUNTS in micro
-  // units, not normalized mixtures, and the reference's default priors
-  // are kept — α = 50/k + 1 = 26, η = 1.1 (LDA.scala:131,163 document
-  // the -1 → default resolution). DECLARED DEVIATIONS, the s38
-  // conventions: K = 2 topics and a parity-seeded doc split in place of
-  // the randomized γ init (LDAOptimizer.scala:130) — EM needs asymmetry
-  // to leave the symmetric fixed point and randomness is exactly what
-  // the oracle gate cannot allow. The E-step ratio is ONE double
-  // expression over exact integer state with fixed parenthesization
-  // (the gmm convention), re-quantized to micro; every M-step sum is an
-  // exact integer. Resolution bound (s38's note sharpened): the final
-  // φ normalization multiplies a micro count by 1e6, so total corpus
-  // tokens must stay under ~9e6 at BIGINT — past that, widen the
-  // normalization to DECIMAL(38,0). ------------------------------------
+  // vertex, per term vertex and globally; `k` is the headline parameter,
+  // :131 setK). This is the reference's ACTUAL EM (the PLSA above is its
+  // α = η → 1 limit, a declared deviation; this closes it): the state is
+  // EXPECTED COUNTS in micro units, not normalized mixtures, and the
+  // reference's default priors are kept — the K-dependent α = 50/K + 1
+  // (26 at K = 2) as a shared double literal and the K-independent
+  // η = 1.1 (LDA.scala:131,163 document the -1 → default resolution).
+  // s46 runs K = 2, s111 K = 3. DECLARED DEVIATIONS, the PLSA
+  // conventions: a parity-seeded doc split in place of the randomized γ
+  // init (LDAOptimizer.scala:130) — EM needs asymmetry to leave the
+  // symmetric fixed point and randomness is exactly what the oracle gate
+  // cannot allow. Topic K is the exact complement of the stored K−1 on
+  // every count (the s107/GmmKd discipline). The E-step ratio is ONE
+  // generated double expression over exact integer state with fixed
+  // parenthesization (the gmm convention), re-quantized to micro; every
+  // M-step sum is an exact integer. Resolution bound (the PLSA note
+  // sharpened): the final φ normalization multiplies a micro count by
+  // 1e6, so total corpus tokens must stay under ~9e6 at BIGINT — past
+  // that, widen the normalization to DECIMAL(38,0). ---------------------
 
-  /** Topic-1 responsibility of one (doc, term) cell in micro-units over
-    * exact integer state columns — nw1/nj1/n1 the topic-1 expected
-    * counts (micro), nw/nj/ntot the constant totals, vn the vocabulary
-    * size. η−1 = 0.1 → 100000 micro; α−1 = 25 → 25000000 micro. Strictly
-    * positive numerators (η > 1), so no zero-denominator fallback
-    * exists to mirror. */
+  /** The two-topic E-step text the s46 oracle shares: topic-1
+    * responsibility of one (doc, term) cell in micro-units over exact
+    * integer state columns — nw1/nj1/n1 the topic-1 expected counts
+    * (micro), nw/nj/ntot the constant totals, vn the vocabulary size.
+    * η−1 = 0.1 → 100000 micro; α−1 = 25 → 25000000 micro. Strictly
+    * positive numerators (η > 1), so no zero-denominator fallback exists
+    * to mirror. Same parse tree and doubles as [[ldaRespExprK]] at
+    * K = 2. */
   val ldaRespExpr: String = {
     def g(nwk: String, njk: String, nk: String) =
       s"((($nwk + 100000.0) * ($njk + 25000000.0)) / ($nk + (CAST(vn AS DOUBLE) * 100000.0)))"
@@ -577,81 +531,6 @@ object Clustering {
       "CAST((ntot * 1000000) - n1 AS DOUBLE)")
     s"CAST(round(($g1 / ($g1 + $g2)) * 1000000.0) AS BIGINT)"
   }
-
-  /** Two-topic smoothed LDA EM over (`idCol`, `textCol`) documents:
-    * `iters` iterations, each ONE counts ⋈ docState ⋈ termState join
-    * (row-linear in distinct (doc, word) pairs; the 1-row global state
-    * broadcasts) plus per-doc / per-term hash aggregates — the exact
-    * relational transcription of the aggregateMessages send/merge above.
-    * Both state tables localCheckpoint per iteration (the pregel
-    * discipline). Returns the top-`topK` terms per topic:
-    * (topic, rnk, tok, phi_micro), φ the unsmoothed normalized
-    * term-topic count, ties toward the smaller token. */
-  def ldaTopics(docs: DataFrame, idCol: String, textCol: String,
-                iters: Int = 2, topK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val counts = docs.select(col(idCol).as("did"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .groupBy("did", "tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count()
-    val docTotals = counts.groupBy("did").agg(sum("c").as("nj"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val termTotals = counts.groupBy("tok").agg(sum("c").as("nw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totals = termTotals
-      .agg(sum("nw").as("ntot"), count(lit(1)).as("vn"))
-      .localCheckpoint()
-    var doc = docTotals
-      .selectExpr("did", "nj",
-        "CAST(nj * (250000 + ((did % 2) * 500000)) AS BIGINT) AS nj1")
-      .localCheckpoint()
-    var term = termTotals
-      .selectExpr("tok", "nw", "CAST(nw * 500000 AS BIGINT) AS nw1")
-      .localCheckpoint()
-    var glob = totals.selectExpr("CAST(ntot * 500000 AS BIGINT) AS n1")
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val scored = counts
-        .join(doc, "did").join(term, "tok")
-        .crossJoin(broadcast(glob)).crossJoin(broadcast(totals))
-        .selectExpr("did", "tok", "c", s"$ldaRespExpr AS r")
-        .selectExpr("did", "tok", "c * r AS s1c")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      doc = scored.groupBy("did").agg(sum("s1c").as("nj1"))
-        .join(docTotals, "did").select("did", "nj", "nj1")
-        .localCheckpoint()
-      term = scored.groupBy("tok").agg(sum("s1c").as("nw1"))
-        .join(termTotals, "tok").select("tok", "nw", "nw1")
-        .localCheckpoint()
-      glob = term.agg(sum("nw1").as("n1")).localCheckpoint()
-      scored.unpersist()
-    }
-    counts.unpersist(); docTotals.unpersist()
-    val phi = term.crossJoin(broadcast(glob)).crossJoin(broadcast(totals))
-      .selectExpr("tok",
-        "CAST((nw1 * 1000000) DIV n1 AS BIGINT) AS p1",
-        "CAST((((nw * 1000000) - nw1) * 1000000) DIV ((ntot * 1000000) - n1) AS BIGINT) AS p2")
-    termTotals.unpersist()
-    phi.select(lit(1L).as("topic"), col("tok"), col("p1").as("phi_micro"))
-      .union(phi.select(lit(2L).as("topic"), col("tok"), col("p2").as("phi_micro")))
-      .select(col("topic"), col("tok"), col("phi_micro"),
-        row_number().over(Window.partitionBy("topic")
-          .orderBy(col("phi_micro").desc, col("tok"))).cast("long").as("rnk"))
-      .filter(col("rnk") <= topK)
-      .select("topic", "rnk", "tok", "phi_micro")
-  }
-
-  // ---- K-topic smoothed LDA EM (reference mllib/clustering/LDA.scala —
-  // `k` is the headline parameter, :131 setK; the K = 2 member above is
-  // its binary slice). The generalization follows the s107/GmmKd
-  // discipline: topic K is the exact complement of the stored K−1 on
-  // every count, the responsibility is a generated K-fold ratio whose
-  // K = 2 instantiation is value-identical to [[ldaRespExpr]] (same
-  // parse tree, same doubles — LdaKSpec pins the fitted output), and
-  // the reference's K-dependent prior α = 50/K + 1 is embedded as a
-  // shared double literal (η = 1.1 stays the reference's K-independent
-  // EM default). ---------------------------------------------------------
 
   /** α−1 in micro units as a Double.toString round-trip literal —
     * identical text, identical double in both engines. */
@@ -679,30 +558,28 @@ object Clustering {
   /** Parity-seeded doc-mixture fraction of topic k in micro units:
     * doc `did` prefers topic K − (did % K); the preferred topic takes
     * 1e6 − (K−1)·base, the rest base = 1e6 DIV 2K — the K = 2 values
-    * are the legacy 250000/750000 split. */
+    * are the 250000/750000 split. */
   def ldaSeedFracExpr(kTot: Int, k: Int): String = {
     val base = 1000000 / (2 * kTot)
     val pref = 1000000 - (kTot - 1) * base
     s"(CASE WHEN (did % $kTot) = ${kTot - k} THEN $pref ELSE $base END)"
   }
 
-  /** K-topic smoothed LDA EM over (`idCol`, `textCol`) documents — the
-    * [[ldaTopics]] loop with K−1 stored topics: each iteration is still
-    * ONE counts ⋈ docState ⋈ termState join plus per-doc / per-term
-    * hash aggregates (now K−1 sum columns each); states localCheckpoint
-    * per iteration. Returns (topic, rnk, tok, phi_micro) for the
-    * top-`topK` terms of each of the K topics. Same corpus-token
-    * resolution bound as [[ldaTopics]]. */
+  /** K-topic smoothed LDA EM over (`idCol`, `textCol`) documents:
+    * `iters` iterations, each ONE counts ⋈ docState ⋈ termState join
+    * (row-linear in distinct (doc, word) pairs; the 1-row global state
+    * broadcasts) plus per-doc / per-term hash aggregates of K−1 sum
+    * columns each — the exact relational transcription of the
+    * aggregateMessages send/merge above. States localCheckpoint per
+    * iteration (the pregel discipline). Returns the top-`topK` terms of
+    * each of the K topics: (topic, rnk, tok, phi_micro), φ the
+    * unsmoothed normalized term-topic count, ties toward the smaller
+    * token. */
   def ldaTopicsK(docs: DataFrame, idCol: String, textCol: String,
                  kTot: Int, iters: Int = 2, topK: Int = 8): DataFrame = {
     require(kTot >= 2 && kTot <= 6, s"ldaTopicsK: K = $kTot outside [2, 6]")
-    import org.apache.spark.sql.expressions.Window
     val ks = 1 until kTot
-    val counts = docs.select(col(idCol).as("did"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .groupBy("did", "tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count()
+    val counts = docTermCounts(docs, idCol, textCol)
     val docTotals = counts.groupBy("did").agg(sum("c").as("nj"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val termTotals = counts.groupBy("tok").agg(sum("c").as("nw"))
@@ -752,36 +629,35 @@ object Clustering {
           (s"CAST((((nw * 1000000) - ${ldaParts("nw", kTot)}) * 1000000) DIV " +
             s"((ntot * 1000000) - ${ldaParts("n", kTot)}) AS BIGINT) AS p$kTot")): _*)
     termTotals.unpersist()
-    val topics = (2 to kTot).map(k =>
-        phi.select(lit(k.toLong), col("tok"), col(s"p$k")))
-      .foldLeft(phi.select(lit(1L).as("topic"), col("tok"), col("p1").as("phi_micro")))(_ union _)
-    topics.select(col("topic"), col("tok"), col("phi_micro"),
-        row_number().over(Window.partitionBy("topic")
-          .orderBy(col("phi_micro").desc, col("tok"))).cast("long").as("rnk"))
-      .filter(col("rnk") <= topK)
-      .select("topic", "rnk", "tok", "phi_micro")
+    topTermsPerTopic(phi, "p", kTot, "phi_micro", topK)
   }
 
-  // ---- ONLINE variational LDA (reference mllib/clustering/
-  // LDAOptimizer.scala:231 OnlineLDAOptimizer — the second registered
-  // optimizer and the production-corpus path: instead of EM's full
-  // doc-topic-term re-aggregation, each iteration samples a MINIBATCH,
-  // runs per-doc variational inference against the broadcast topic
-  // state (:538 variationalTopicInference), and blends the batch's
-  // sufficient statistics into λ at learning rate
-  // ρ_t = (τ0 + t)^−κ (:467 updateLambda). DECLARED DEVIATIONS, the
-  // s38/s46 conventions sharpened for the online path: K = 2;
-  // deterministic hash-residue minibatches (¼ of the docs per
-  // iteration, disjoint across iterations — the sample-with-replacement
-  // draw is exactly what the oracle gate cannot allow); parity-seeded
-  // λ and γ inits in place of the random Gamma(100, 0.01) matrices;
-  // ONE γ update per doc instead of the 1e-3-convergence inner loop;
-  // and exp∘digamma(x) ≈ x − 1/2 (exact to O(1/x) for the x ≥ 0.5
-  // shapes every state here keeps), which turns the reference's
+  // ---- K-topic ONLINE variational LDA (reference mllib/clustering/
+  // LDAOptimizer.scala:231 OnlineLDAOptimizer, k taken from the
+  // enclosing LDA — the second registered optimizer and the
+  // production-corpus path: instead of EM's full doc-topic-term
+  // re-aggregation, each iteration samples a MINIBATCH, runs per-doc
+  // variational inference against the broadcast topic state (:538
+  // variationalTopicInference), and blends the batch's sufficient
+  // statistics into λ at learning rate ρ_t = (τ0 + t)^−κ (:467
+  // updateLambda). s75/s82 run K = 2, s117 K = 3. No complement trick
+  // here: the reference's λ stores ALL K topic rows, and so does this
+  // state — per-topic column loops over the SAME ratio / fraction /
+  // blend formula strings. DECLARED DEVIATIONS, the EM conventions
+  // sharpened for the online path: deterministic hash-residue
+  // minibatches (¼ of the docs per iteration, disjoint across
+  // iterations — the sample-with-replacement draw is exactly what the
+  // oracle gate cannot allow); parity-seeded λ and γ inits in place of
+  // the random Gamma(100, 0.01) matrices (K = 2 the historical parity
+  // seeds; K ≥ 3 rotates a +½/−½ γ perturbation by doc residue and
+  // favors topic K − residue in the λ seed); ONE γ update per doc
+  // instead of the 1e-3-convergence inner loop; and
+  // exp∘digamma(x) ≈ x − 1/2 (exact to O(1/x) for the x ≥ 0.5 shapes
+  // every state here keeps), which turns the reference's
   // expElogbeta/expElogtheta rows into pure integer ratio expressions.
-  // Defaults kept: α = η = 1/k = 0.5, τ0 = 1024, κ = 0.51. All state
-  // is micro-unit BIGINT; the only doubles are the ρ-blend update, ONE
-  // shared formula string rounded once per cell. ----------------------
+  // Defaults kept: α = η = 1/k (0.5 at K = 2), τ0 = 1024, κ = 0.51. All
+  // state is micro-unit BIGINT; the only doubles are the ρ-blend update,
+  // ONE shared formula string rounded once per cell. --------------------
 
   /** exp(digamma(a) − digamma(s)) ≈ (a − ½)/(s − ½) over micro-unit
     * state, emitted in micro units. Non-negative operands (state never
@@ -807,6 +683,25 @@ object Clustering {
     * literal (1-ulp pow slack is absorbed by the micro rounding). */
   def oldaRho(t: Int): String = s"power(${1024 + t}.0, -0.51)"
 
+  /** γ seed expressions for K topics (the declared Gamma(100, 0.01)
+    * stand-in): K = 2 the historical parity text; K ≥ 3 docs with
+    * residue r perturb topic r+1 by +½ and its successor by −½ around
+    * the 1.25 base (every doc asymmetric, every topic reachable). */
+  def oldaGammaInitExprsK(kTot: Int): Seq[String] =
+    if (kTot == 2)
+      Seq("CAST(750000 + (did % 2) * 500000 AS BIGINT) AS g1",
+        "CAST(1750000 - (did % 2) * 500000 AS BIGINT) AS g2")
+    else (1 to kTot).map { k =>
+      s"CAST(1250000 + (CASE WHEN (did % $kTot) = ${k - 1} THEN 500000 " +
+        s"WHEN (did % $kTot) = ${k % kTot} THEN -500000 ELSE 0 END) AS BIGINT) AS g$k"
+    }
+
+  /** λ seed for K topics over the token-hash residue `par` (in scope):
+    * topic K − par takes the +½ boost — the K = 2 values are the
+    * historical l1/l2 parity seeds. */
+  def oldaLambdaInitExprK(kTot: Int, k: Int, parExpr: String): String =
+    s"CAST(1000000 + (CASE WHEN ($parExpr) = ${kTot - k} THEN 500000 ELSE 0 END) AS BIGINT) AS l$k"
+
   /** The per-(doc, term, topic) responsibility stage shared by the fit
     * and the perplexity evaluation, over a PRE-JOINED `ce` = cells ⋈
     * expElogbeta frame (r21, guide §2.4 "two operations keyed the same
@@ -816,80 +711,82 @@ object Clustering {
     * tok-keyed join is computed once per iteration and pinned; only the
     * cheap did-keyed γ join differs between the two scores. Join
     * reordering only — the per-row formula strings are unchanged, so
-    * every value is bit-identical). Emits (did, tok, c, f1, f2, pn). */
-  private def oldaScore(ce: DataFrame, g: DataFrame): DataFrame =
+    * every value is bit-identical). θ ratios over the γ sum, exact
+    * integer φ, per-topic fractions: emits (did, tok, c, pn, f1..fK). */
+  private def oldaScoreK(ce: DataFrame, g: DataFrame,
+                         kTot: Int): DataFrame = {
+    val ks = 1 to kTot
+    val gsum = ks.map(k => s"g$k").reduce((a, b) => s"($a + $b)")
+    val pn = ks.map(k => s"(et$k * eb$k)").reduce((a, b) => s"$a + $b")
     ce.join(g, "did")
-      .selectExpr("did", "tok", "c",
-        s"${oldaRatioExpr("g1", "(g1 + g2)", "DIV")} AS et1",
-        s"${oldaRatioExpr("g2", "(g1 + g2)", "DIV")} AS et2", "eb1", "eb2")
-      .selectExpr("did", "tok", "c", "et1", "et2", "eb1", "eb2",
-        "(et1 * eb1) + (et2 * eb2) AS pn")
-      .selectExpr("did", "tok", "c", "pn",
-        s"${oldaFracExpr("et1", "eb1", "pn", "DIV")} AS f1",
-        s"${oldaFracExpr("et2", "eb2", "pn", "DIV")} AS f2")
-
-  /** Parity γ seeds for a doc set (the declared Gamma(100, 0.01)
-    * stand-in). */
-  private def oldaGammaInit(cells: DataFrame): DataFrame =
-    cells.select("did").distinct()
-      .selectExpr("did", "CAST(750000 + (did % 2) * 500000 AS BIGINT) AS g1",
-        "CAST(1750000 - (did % 2) * 500000 AS BIGINT) AS g2")
-
-  /** One γ update from a scored frame (the declared inner-loop
-    * slice). */
-  private def oldaGammaStep(scored: DataFrame): DataFrame =
-    scored.groupBy("did")
-      .agg(sum(expr("c * f1")).as("s1"), sum(expr("c * f2")).as("s2"))
-      .selectExpr("did", "CAST(500000 + s1 AS BIGINT) AS g1",
-        "CAST(500000 + s2 AS BIGINT) AS g2")
-
-  /** expElogbeta rows for a λ state. */
-  private def oldaEb(lambda: DataFrame): DataFrame = {
-    val lsum = lambda.agg(sum("l1").as("ls1"), sum("l2").as("ls2"))
-    lambda.crossJoin(broadcast(lsum))
-      .selectExpr("tok", s"${oldaRatioExpr("l1", "ls1", "DIV")} AS eb1",
-        s"${oldaRatioExpr("l2", "ls2", "DIV")} AS eb2")
+      .selectExpr(Seq("did", "tok", "c") ++
+        ks.map(k => s"${oldaRatioExpr(s"g$k", gsum, "DIV")} AS et$k") ++
+        ks.map(k => s"eb$k"): _*)
+      .selectExpr(Seq("did", "tok", "c") ++ ks.map(k => s"et$k") ++
+        ks.map(k => s"eb$k") :+ s"$pn AS pn": _*)
+      .selectExpr(Seq("did", "tok", "c", "pn") ++
+        ks.map(k => s"${oldaFracExpr(s"et$k", s"eb$k", "pn", "DIV")} AS f$k"): _*)
   }
 
-  /** The [[onlineLdaTopics]] fitting loop, returning (counts — still
-    * persisted, caller unpersists — and the final λ state). */
-  private def onlineLdaState(docs: DataFrame, idCol: String,
-                             textCol: String,
-                             iters: Int): (DataFrame, DataFrame) = {
-    val counts = docs.select(col(idCol).as("did"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .groupBy("did", "tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count()
+  /** expElogbeta rows (tok, eb1..ebK) of a K-column λ state. */
+  private def oldaExpElogbeta(lambda: DataFrame, kTot: Int): DataFrame = {
+    val ks = 1 to kTot
+    val lsum = lambda.agg(sum("l1").as("ls1"),
+      ks.drop(1).map(k => sum(s"l$k").as(s"ls$k")): _*)
+    lambda.crossJoin(broadcast(lsum))
+      .selectExpr("tok" +:
+        ks.map(k => s"${oldaRatioExpr(s"l$k", s"ls$k", "DIV")} AS eb$k"): _*)
+  }
+
+  /** One γ update (the declared inner-loop slice) from a scored frame:
+    * (did, g1..gK). */
+  private def oldaGammaUpdate(scored: DataFrame, kTot: Int): DataFrame = {
+    val ks = 1 to kTot
+    scored.groupBy("did")
+      .agg(sum(expr("c * f1")).as("s1"),
+        ks.drop(1).map(k => sum(expr(s"c * f$k")).as(s"s$k")): _*)
+      .selectExpr("did" +:
+        ks.map(k => s"CAST(500000 + s$k AS BIGINT) AS g$k"): _*)
+  }
+
+  /** The K-topic online fitting loop: returns (counts — still
+    * persisted, caller unpersists — and the final K-column λ state). */
+  private def onlineLdaStateK(docs: DataFrame, idCol: String,
+                              textCol: String, kTot: Int,
+                              iters: Int): (DataFrame, DataFrame) = {
+    val ks = 1 to kTot
+    val counts = docTermCounts(docs, idCol, textCol)
     val dTot = counts.select("did").distinct()
       .agg(count(lit(1)).as("dd")).localCheckpoint()
-    val tokPar = s"(${Dedup.portableHash("tok", "'olda'")} % 2)"
+    val tokPar = s"(${Dedup.portableHash("tok", "'olda'")} % $kTot)"
     var lambda = counts.select("tok").distinct()
-      .selectExpr("tok",
-        s"CAST(1000000 + $tokPar * 500000 AS BIGINT) AS l1",
-        s"CAST(1500000 - $tokPar * 500000 AS BIGINT) AS l2")
+      .selectExpr("tok" +:
+        ks.map(k => oldaLambdaInitExprK(kTot, k, tokPar)): _*)
       .localCheckpoint()
     for (t <- 1 to iters) {
-      val eb = oldaEb(lambda)
+      val eb = oldaExpElogbeta(lambda, kTot)
       // residue rotates mod 4 so iters > 4 reuses the batches instead of
       // selecting an empty one (pmod ∈ {0..3} never equals t-1 ≥ 4, and an
       // empty batch makes ss = 0 → dd/0 → NaN λ)
       val bc = counts.filter(expr(
         s"pmod(${Dedup.portableHash("cast(did as string)", "'oldab'")}, 4) = ${(t - 1) % 4}"))
+      val gz = bc.select("did").distinct()
+        .selectExpr("did" +: oldaGammaInitExprsK(kTot): _*)
       // one γ update (the declared inner-loop slice), then the batch
       // sufficient statistics under the UPDATED γ — the reference's
       // post-loop sstats shape. The batch ⋈ expElogbeta join is shared
-      // by both scores (oldaScore scaladoc) and pinned for the iteration.
+      // by both scores (oldaScoreK scaladoc) and pinned for the iteration.
       val ce = bc.join(eb, "tok").localCheckpoint()
-      val g1 = oldaGammaStep(oldaScore(ce, oldaGammaInit(bc)))
-      val br = oldaScore(ce, g1).groupBy("tok")
-        .agg(sum(expr("c * f1")).as("br1"), sum(expr("c * f2")).as("br2"))
+      val g1 = oldaGammaUpdate(oldaScoreK(ce, gz, kTot), kTot)
+      val br = oldaScoreK(ce, g1, kTot).groupBy("tok")
+        .agg(sum(expr("c * f1")).as("br1"),
+          ks.drop(1).map(k => sum(expr(s"c * f$k")).as(s"br$k")): _*)
       val bs = bc.select("did").distinct().agg(count(lit(1)).as("ss"))
       lambda = lambda.join(br, Seq("tok"), "left")
-        .na.fill(0L, Seq("br1", "br2"))
+        .na.fill(0L, ks.map(k => s"br$k"))
         .crossJoin(broadcast(dTot)).crossJoin(broadcast(bs))
-        .selectExpr("tok", s"${oldaLambdaUpdExpr("l1", "br1", oldaRho(t))} AS l1",
-          s"${oldaLambdaUpdExpr("l2", "br2", oldaRho(t))} AS l2")
+        .selectExpr("tok" +:
+          ks.map(k => s"${oldaLambdaUpdExpr(s"l$k", s"br$k", oldaRho(t))} AS l$k"): _*)
         .localCheckpoint()
       ce.unpersist()
     }
@@ -910,15 +807,15 @@ object Clustering {
   def oldaPerpExpr: String =
     "CAST(round(exp(-(CAST(ll_milli AS DOUBLE) / 1000.0) / CAST(n_tokens AS DOUBLE)) * 1000000.0) AS BIGINT)"
 
-  /** logPerplexity of the fitted online model (reference
+  /** logPerplexity of the fitted two-topic online model (reference
     * LDAModel.scala:255 logPerplexity = −logLikelihood / corpus token
     * count, with :235 logLikelihood delegating to the :280
-    * variational bound): run the [[onlineLdaState]] fit, then — like
-    * the reference — variational inference per doc over the FULL
+    * variational bound): run the [[onlineLdaStateK]] fit at K = 2, then
+    * — like the reference — variational inference per doc over the FULL
     * corpus (γ init + one update, the fit's declared inner slice)
     * and the bound's dominant token term Σ_dw c·ln(θ_d·β_w), each
     * cell milli-rounded through ONE shared ln so the corpus sum is an
-    * exact integer. DECLARED DEVIATION beyond the s75 set: the
+    * exact integer. DECLARED DEVIATION beyond the online-LDA set: the
     * Dirichlet prior/entropy terms of the bound (E[log p(θ|α)] −
     * E[log q(θ|γ)] and the topic analogs) are omitted — they need
     * lgamma, which Spark SQL lacks; the token term is the
@@ -926,15 +823,17 @@ object Clustering {
     * row: (n_cells, n_tokens, ll_milli, perplexity_micro). */
   def onlineLdaPerplexity(docs: DataFrame, idCol: String, textCol: String,
                           iters: Int = 2): DataFrame = {
-    val (counts, lambda) = onlineLdaState(docs, idCol, textCol, iters)
-    val eb = oldaEb(lambda)
+    val kTot = 2
+    val (counts, lambda) = onlineLdaStateK(docs, idCol, textCol, kTot, iters)
     // the full-corpus evaluation scores twice (γ update, then the bound
     // under the updated γ) — the corpus ⋈ expElogbeta join is shared and
     // pinned exactly like the fit's per-iteration batch join
-    val ce = counts.join(eb, "tok")
+    val ce = counts.join(oldaExpElogbeta(lambda, kTot), "tok")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val g1 = oldaGammaStep(oldaScore(ce, oldaGammaInit(counts)))
-    val out = oldaScore(ce, g1)
+    val gz = counts.select("did").distinct()
+      .selectExpr("did" +: oldaGammaInitExprsK(kTot): _*)
+    val g1 = oldaGammaUpdate(oldaScoreK(ce, gz, kTot), kTot)
+    val out = oldaScoreK(ce, g1, kTot)
       .selectExpr("c", s"$oldaLnCellExpr AS lnq")
       .agg(count(lit(1)).as("n_cells"), sum("c").as("n_tokens"),
         sum(expr("c * lnq")).as("ll_milli"))
@@ -948,7 +847,7 @@ object Clustering {
     out
   }
 
-  /** Two-topic online variational LDA over (`idCol`, `textCol`)
+  /** K-topic online variational LDA over (`idCol`, `textCol`)
     * documents: `iters` minibatch iterations, each ONE batch ⋈ γ ⋈
     * expElogbeta join (row-linear in the BATCH's (doc, word) pairs —
     * the corpus is never re-aggregated, the point of the online path)
@@ -959,139 +858,25 @@ object Clustering {
     * reason the reference ships this optimizer next to EM. Returns the
     * top-`topK` terms per topic: (topic, rnk, tok, lambda_micro), ties
     * toward the smaller token. */
-  def onlineLdaTopics(docs: DataFrame, idCol: String, textCol: String,
-                      iters: Int = 2, topK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (counts, lambda) = onlineLdaState(docs, idCol, textCol, iters)
-    counts.unpersist()
-    lambda.select(lit(1L).as("topic"), col("tok"), col("l1").as("lambda_micro"))
-      .union(lambda.select(lit(2L).as("topic"), col("tok"), col("l2").as("lambda_micro")))
-      .select(col("topic"), col("tok"), col("lambda_micro"),
-        row_number().over(Window.partitionBy("topic")
-          .orderBy(col("lambda_micro").desc, col("tok"))).cast("long").as("rnk"))
-      .filter(col("rnk") <= topK)
-      .select("topic", "rnk", "tok", "lambda_micro")
-  }
-
-  // ---- K-topic ONLINE variational LDA (LDAOptimizer.scala:231 takes k
-  // from the enclosing LDA; the chain above fixes K = 2 — the last
-  // online-path topic-axis scaffolding). No complement trick here: the
-  // reference's λ stores ALL K topic rows, and so does this state — the
-  // generalization is per-topic column loops over the SAME ratio /
-  // fraction / blend formula strings. The binary slice keeps the
-  // historical parity seeds verbatim (spec-pinned); K ≥ 3 rotates a
-  // +½/−½ γ perturbation by doc residue and favors topic K − residue
-  // in the λ seed — the K = 2 values of both schemes coincide with the
-  // legacy text. -------------------------------------------------------
-
-  /** γ seed expressions for K topics (the declared Gamma(100, 0.01)
-    * stand-in): K = 2 the historical parity text; K ≥ 3 docs with
-    * residue r perturb topic r+1 by +½ and its successor by −½ around
-    * the 1.25 base (every doc asymmetric, every topic reachable). */
-  def oldaGammaInitExprsK(kTot: Int): Seq[String] =
-    if (kTot == 2)
-      Seq("CAST(750000 + (did % 2) * 500000 AS BIGINT) AS g1",
-        "CAST(1750000 - (did % 2) * 500000 AS BIGINT) AS g2")
-    else (1 to kTot).map { k =>
-      s"CAST(1250000 + (CASE WHEN (did % $kTot) = ${k - 1} THEN 500000 " +
-        s"WHEN (did % $kTot) = ${k % kTot} THEN -500000 ELSE 0 END) AS BIGINT) AS g$k"
-    }
-
-  /** λ seed for K topics over the token-hash residue `par` (in scope):
-    * topic K − par takes the +½ boost — the K = 2 values are the
-    * historical l1/l2 parity seeds. */
-  def oldaLambdaInitExprK(kTot: Int, k: Int, parExpr: String): String =
-    s"CAST(1000000 + (CASE WHEN ($parExpr) = ${kTot - k} THEN 500000 ELSE 0 END) AS BIGINT) AS l$k"
-
-  /** The K-topic responsibility stage over a PRE-JOINED `ce` = cells ⋈
-    * expElogbeta frame (shared by both per-iteration scores — the
-    * [[oldaScore]] rationale): θ ratios over the γ sum, exact integer φ,
-    * per-topic fractions — the legacy 2-column projection
-    * loop-generalized. */
-  private def oldaScoreK(ce: DataFrame, g: DataFrame,
-                         kTot: Int): DataFrame = {
-    val ks = 1 to kTot
-    val gsum = ks.map(k => s"g$k").reduce((a, b) => s"($a + $b)")
-    val pn = ks.map(k => s"(et$k * eb$k)").reduce((a, b) => s"$a + $b")
-    ce.join(g, "did")
-      .selectExpr(Seq("did", "tok", "c") ++
-        ks.map(k => s"${oldaRatioExpr(s"g$k", gsum, "DIV")} AS et$k") ++
-        ks.map(k => s"eb$k"): _*)
-      .selectExpr(Seq("did", "tok", "c") ++ ks.map(k => s"et$k") ++
-        ks.map(k => s"eb$k") :+ s"$pn AS pn": _*)
-      .selectExpr(Seq("did", "tok", "c", "pn") ++
-        ks.map(k => s"${oldaFracExpr(s"et$k", s"eb$k", "pn", "DIV")} AS f$k"): _*)
-  }
-
-  /** The K-topic online fitting loop ([[onlineLdaState]] with per-topic
-    * column loops): returns (counts — still persisted — and the final
-    * K-column λ). */
-  private def onlineLdaStateK(docs: DataFrame, idCol: String,
-                              textCol: String, kTot: Int,
-                              iters: Int): (DataFrame, DataFrame) = {
-    val ks = 1 to kTot
-    val counts = docs.select(col(idCol).as("did"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .groupBy("did", "tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count()
-    val dTot = counts.select("did").distinct()
-      .agg(count(lit(1)).as("dd")).localCheckpoint()
-    val tokPar = s"(${Dedup.portableHash("tok", "'olda'")} % $kTot)"
-    var lambda = counts.select("tok").distinct()
-      .selectExpr("tok" +:
-        ks.map(k => oldaLambdaInitExprK(kTot, k, tokPar)): _*)
-      .localCheckpoint()
-    for (t <- 1 to iters) {
-      val lsum = lambda.agg(sum("l1").as("ls1"),
-        ks.drop(1).map(k => sum(s"l$k").as(s"ls$k")): _*)
-      val eb = lambda.crossJoin(broadcast(lsum))
-        .selectExpr("tok" +:
-          ks.map(k => s"${oldaRatioExpr(s"l$k", s"ls$k", "DIV")} AS eb$k"): _*)
-      val bc = counts.filter(expr(
-        s"pmod(${Dedup.portableHash("cast(did as string)", "'oldab'")}, 4) = ${(t - 1) % 4}"))
-      val gz = bc.select("did").distinct()
-        .selectExpr("did" +: oldaGammaInitExprsK(kTot): _*)
-      // shared batch ⋈ expElogbeta join, pinned for both scores (the
-      // oldaScore rationale)
-      val ce = bc.join(eb, "tok").localCheckpoint()
-      val g1 = oldaScoreK(ce, gz, kTot).groupBy("did")
-        .agg(sum(expr("c * f1")).as("s1"),
-          ks.drop(1).map(k => sum(expr(s"c * f$k")).as(s"s$k")): _*)
-        .selectExpr("did" +:
-          ks.map(k => s"CAST(500000 + s$k AS BIGINT) AS g$k"): _*)
-      val br = oldaScoreK(ce, g1, kTot).groupBy("tok")
-        .agg(sum(expr("c * f1")).as("br1"),
-          ks.drop(1).map(k => sum(expr(s"c * f$k")).as(s"br$k")): _*)
-      val bs = bc.select("did").distinct().agg(count(lit(1)).as("ss"))
-      lambda = lambda.join(br, Seq("tok"), "left")
-        .na.fill(0L, ks.map(k => s"br$k"))
-        .crossJoin(broadcast(dTot)).crossJoin(broadcast(bs))
-        .selectExpr("tok" +:
-          ks.map(k => s"${oldaLambdaUpdExpr(s"l$k", s"br$k", oldaRho(t))} AS l$k"): _*)
-        .localCheckpoint()
-      ce.unpersist()
-    }
-    (counts, lambda)
-  }
-
-  /** K-topic online LDA topics: the [[onlineLdaTopics]] output shape
-    * over the K-column λ state. */
   def onlineLdaTopicsK(docs: DataFrame, idCol: String, textCol: String,
                        kTot: Int, iters: Int = 2, topK: Int = 8): DataFrame = {
     require(kTot >= 2 && kTot <= 6, s"onlineLdaTopicsK: K = $kTot outside [2, 6]")
-    import org.apache.spark.sql.expressions.Window
     val (counts, lambda) = onlineLdaStateK(docs, idCol, textCol, kTot, iters)
     counts.unpersist()
-    val topics = (2 to kTot).map(k =>
-        lambda.select(lit(k.toLong), col("tok"), col(s"l$k")))
-      .foldLeft(lambda.select(lit(1L).as("topic"), col("tok"), col("l1").as("lambda_micro")))(_ union _)
-    topics.select(col("topic"), col("tok"), col("lambda_micro"),
-        row_number().over(Window.partitionBy("topic")
-          .orderBy(col("lambda_micro").desc, col("tok"))).cast("long").as("rnk"))
-      .filter(col("rnk") <= topK)
-      .select("topic", "rnk", "tok", "lambda_micro")
+    topTermsPerTopic(lambda, "l", kTot, "lambda_micro", topK)
   }
+
+  // ---- Gaussian mixture, 1-D two-component EM (reference mllib/
+  // clustering/GaussianMixture.scala:161 run — per EM iteration one
+  // aggregate of per-point responsibility-weighted sums (:198, the
+  // ExpectationSum treeAggregate) then a driver update of weights and
+  // gaussians (:238) — exactly the scan + 1-row-projection loop below.
+  // Thin-slice deviations, declared: one dimension, two components, and
+  // a SHARED variance held fixed at the population variance (the
+  // reference re-fits per-component covariances; a known-common-variance
+  // location mixture keeps the responsibility a pure sigmoid of x, so
+  // the whole E-step shares the s19 sigmoid machinery and quantizes to
+  // exact micro integers) ----------------------------------------------
 
   /** The six split sufficient statistics carried (constant) through every
     * EM state row: per mean-split side, exact (count, Σx, Σx²). */

@@ -183,12 +183,13 @@ object MlEval {
 
     // Two-topic PLSA (reference mllib/clustering/LDA.scala:46 via the
     // EMLDAOptimizer path, LDAOptimizer.scala:79/:150 — deviations
-    // declared in Clustering.plsaTopics' scaladoc): two integer-exact EM
-    // iterations over the document-term counts, parity-seeded mixtures;
-    // top-8 words per topic with their micro emission weights.
+    // declared in Clustering's K-topic PLSA section): plsaTopicsK at
+    // K = 2, two integer-exact EM iterations over the document-term
+    // counts, parity-seeded mixtures; top-8 words per topic with their
+    // micro emission weights.
     "s38_plsa_topics" -> { (s, dir) =>
-      graft.ext.Clustering.plsaTopics(Tables.documents(s, dir),
-          "doc_id", "text", iters = 2, topK = 8)
+      graft.ext.Clustering.plsaTopicsK(Tables.documents(s, dir),
+          "doc_id", "text", kTot = 2, iters = 2, topK = 8)
         .orderBy("topic", "rnk")
     },
 
@@ -196,34 +197,37 @@ object MlEval {
     // computePTopic + LDAOptimizer.scala:150 next — the reference's
     // ACTUAL Dirichlet-smoothed EM with its default priors α = 26,
     // η = 1.1, closing s38's declared no-smoothing deviation; remaining
-    // deviations in Clustering.ldaTopics' scaladoc): two iterations over
-    // the document-term counts, expected-count state in exact micro
-    // integers, the E-step ratio one shared double formula string.
+    // deviations in Clustering's K-topic smoothed LDA section):
+    // ldaTopicsK at K = 2, two iterations over the document-term counts,
+    // expected-count state in exact micro integers, the E-step ratio one
+    // shared double formula string.
     "s46_lda_topics" -> { (s, dir) =>
-      graft.ext.Clustering.ldaTopics(Tables.documents(s, dir),
-          "doc_id", "text", iters = 2, topK = 8)
+      graft.ext.Clustering.ldaTopicsK(Tables.documents(s, dir),
+          "doc_id", "text", kTot = 2, iters = 2, topK = 8)
         .orderBy("topic", "rnk")
     },
 
     // ONLINE variational LDA (reference LDAOptimizer.scala:231
     // OnlineLDAOptimizer / :538 variationalTopicInference / :467
     // updateLambda — the second registered optimizer, closing the
-    // s38/s46 EM-only coverage; deviations declared in
-    // Clustering.onlineLdaTopics' scaladoc): two minibatch iterations
-    // over disjoint hash-residue quarters of the corpus, one quantized
-    // γ update per doc, sufficient statistics blended into λ at
-    // ρ_t = (1024 + t)^−0.51. Top-8 terms per topic by λ.
+    // s38/s46 EM-only coverage; deviations declared in Clustering's
+    // K-topic online LDA section): onlineLdaTopicsK at K = 2, two
+    // minibatch iterations over disjoint hash-residue quarters of the
+    // corpus, one quantized γ update per doc, sufficient statistics
+    // blended into λ at ρ_t = (1024 + t)^−0.51. Top-8 terms per topic
+    // by λ.
     "s75_online_lda" -> { (s, dir) =>
-      graft.ext.Clustering.onlineLdaTopics(Tables.documents(s, dir),
-          "doc_id", "text", iters = 2, topK = 8)
+      graft.ext.Clustering.onlineLdaTopicsK(Tables.documents(s, dir),
+          "doc_id", "text", kTot = 2, iters = 2, topK = 8)
         .orderBy("topic", "rnk")
     },
 
     // logPerplexity of the fitted online model (reference
     // LDAModel.scala:255 logPerplexity = −logLikelihood / corpus
-    // tokens, :235 via the variational bound): per-doc inference over
-    // the FULL corpus against the final λ, then the bound's token term
-    // with one milli-rounded ln per cell and exp(−mean) at the end.
+    // tokens, :235 via the variational bound): the s75 fit (the K = 2
+    // online state), per-doc inference over the FULL corpus against the
+    // final λ, then the bound's token term with one milli-rounded ln per
+    // cell and exp(−mean) at the end.
     // The Dirichlet prior/entropy terms need lgamma (absent from Spark
     // SQL) and are omitted — declared in
     // Clustering.onlineLdaPerplexity's scaladoc.
@@ -288,8 +292,8 @@ object MlEval {
     // from the enclosing LDA; s75/s82 fix K = 2 — the last online-path
     // topic scaffolding): three topics, per-topic column loops over the
     // same ratio/fraction/blend strings (no complement — the
-    // reference's λ stores all K rows, and so does this state).
-    // LdaKSpec pins the K = 2 slice equal to onlineLdaTopics.
+    // reference's λ stores all K rows, and so does this state). The
+    // same kernel runs s75/s82 at K = 2.
     "s117_online_lda_k3" -> { (s, dir) =>
       graft.ext.Clustering.onlineLdaTopicsK(Tables.documents(s, dir),
           "doc_id", "text", kTot = 3, iters = 2, topK = 8)
@@ -300,8 +304,7 @@ object MlEval {
     // s38's declared PLSA model class — the alpha = eta -> 1 limit;
     // K-1 stored mixtures, complement sum columns, integer-only
     // E-step whose K = 2 instantiation is value-identical to
-    // plsaRespExpr). LdaKSpec pins plsaTopicsK(2) equal to the legacy
-    // plsaTopics output; s38 untouched.
+    // plsaRespExpr). The same kernel runs s38 at K = 2.
     "s115_plsa_k3" -> { (s, dir) =>
       graft.ext.Clustering.plsaTopicsK(Tables.documents(s, dir),
           "doc_id", "text", kTot = 3, iters = 2, topK = 8)
@@ -313,8 +316,7 @@ object MlEval {
     // fixed K = 2): three topics over the documents corpus, topic 3
     // the exact complement, responsibility the generated K-fold ratio
     // with the reference's K-dependent prior α = 50/K + 1 as a shared
-    // double literal. LdaKSpec pins ldaTopicsK(2) equal to the legacy
-    // ldaTopics output; s46/s38/s75/s82 are untouched.
+    // double literal. The same kernel runs s46 at K = 2.
     "s111_lda_k3" -> { (s, dir) =>
       graft.ext.Clustering.ldaTopicsK(Tables.documents(s, dir),
           "doc_id", "text", kTot = 3, iters = 2, topK = 8)
@@ -442,9 +444,6 @@ object MlEval {
        |      FROM $cellsTab b JOIN $gTab USING (did) JOIN $ebTab e USING (tok))))""".stripMargin
   }
 
-  /** The s75 online-LDA fitting chain: corpus counts, parity λ seed,
-    * two unrolled minibatch iterations ending at `lam2`. Shared by the
-    * s75 and s82 oracles. */
   /** [[oldaScoreCte]] at K topics — same ratio/fraction strings, loop
     * columns. */
   private def oldaScoreCteK(name: String, cellsTab: String, gTab: String,
@@ -504,6 +503,9 @@ object MlEval {
        |$iters""".stripMargin
   }
 
+  /** The s75 online-LDA fitting chain: corpus counts, parity λ seed,
+    * two unrolled minibatch iterations ending at `lam2`. Shared by the
+    * s75 and s82 oracles. */
   private def oldaChainCtes: String = {
     import graft.ext.Clustering
     val tokHash = "CAST('0x' || substr(md5('olda:' || tok), 1, 15) AS BIGINT)"

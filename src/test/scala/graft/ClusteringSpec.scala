@@ -236,15 +236,15 @@ class ClusteringSpec extends SparkSpec {
     val docs = (1L to 20L).map { i =>
       (i, if (i % 2 == 1) "u v u" else "x y x")
     }.toDF("doc_id", "text")
-    val got = Clustering.plsaTopics(docs, "doc_id", "text", iters = 2, topK = 2)
+    val got = Clustering.plsaTopicsK(docs, "doc_id", "text", kTot = 2, iters = 2, topK = 2)
       .collect().groupBy(_.getLong(0))
       .map { case (t, rs) => t -> rs.map(_.getString(2)).toSet }
     assert(got(1L) === Set("u", "v"))
     assert(got(2L) === Set("x", "y"))
     // partitioning determinism of the full integer-exact chain
-    val a = Clustering.plsaTopics(docs.repartition(1), "doc_id", "text", 2, 4)
+    val a = Clustering.plsaTopicsK(docs.repartition(1), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
-    val b = Clustering.plsaTopics(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 4)
+    val b = Clustering.plsaTopicsK(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
     assert(a.toSeq === b.toSeq)
   }
@@ -279,7 +279,7 @@ class ClusteringSpec extends SparkSpec {
     val docs = (1L to 20L).map { i =>
       (i, (if (i % 2 == 1) "u v " else "x y ") * 50)
     }.toDF("doc_id", "text")
-    val all = Clustering.ldaTopics(docs, "doc_id", "text", iters = 2, topK = 4)
+    val all = Clustering.ldaTopicsK(docs, "doc_id", "text", kTot = 2, iters = 2, topK = 4)
       .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3)))
     val top = all.groupBy(_._1).map { case (t, rs) =>
       t -> rs.sortBy(-_._3).take(2).map(_._2).toSet
@@ -292,9 +292,9 @@ class ClusteringSpec extends SparkSpec {
     assert(all.forall(_._3 > 0L), s"expected all phi > 0: ${all.mkString(",")}")
     // partitioning determinism of the full chain (integer state + one
     // fixed-parenthesization double ratio per cell)
-    val a = Clustering.ldaTopics(docs.repartition(1), "doc_id", "text", 2, 4)
+    val a = Clustering.ldaTopicsK(docs.repartition(1), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
-    val b = Clustering.ldaTopics(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 4)
+    val b = Clustering.ldaTopicsK(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
     assert(a.toSeq === b.toSeq)
   }
@@ -309,7 +309,7 @@ class ClusteringSpec extends SparkSpec {
     val docs = (1L to 40L).map { i =>
       (i, (if (i % 2 == 1) "u v " else "x y ") * 10)
     }.toDF("doc_id", "text")
-    val out = Clustering.onlineLdaTopics(docs, "doc_id", "text", iters = 2, topK = 4)
+    val out = Clustering.onlineLdaTopicsK(docs, "doc_id", "text", kTot = 2, iters = 2, topK = 4)
       .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3)))
     val top = out.groupBy(_._1).map { case (t, rs) =>
       t -> rs.sortBy(-_._3).take(2).map(_._2).toSet
@@ -321,9 +321,9 @@ class ClusteringSpec extends SparkSpec {
     assert(out.forall(r => !seeds.contains(r._3)), out.mkString(","))
     // partitioning determinism (integer state; the only double is the
     // fixed-parenthesization rho blend rounded once per cell)
-    val a = Clustering.onlineLdaTopics(docs.repartition(1), "doc_id", "text", 2, 4)
+    val a = Clustering.onlineLdaTopicsK(docs.repartition(1), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
-    val b = Clustering.onlineLdaTopics(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 4)
+    val b = Clustering.onlineLdaTopicsK(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
     assert(a.toSeq === b.toSeq)
   }
@@ -343,6 +343,11 @@ class ClusteringSpec extends SparkSpec {
     assert(pSep.getLong(3) < pMix.getLong(3),
       s"sep=${pSep.getLong(3)} mix=${pMix.getLong(3)}")
     assert(pSep.getLong(1) === 840L) // 40 docs x (20 tokens + the trailing-space empty)
+    // golden (n_cells, n_tokens, ll_milli, perplexity_micro), recorded
+    // from the former two-topic online state
+    def cells(r: org.apache.spark.sql.Row) = (0 to 3).map(r.getLong)
+    assert(cells(pSep) === Seq(120L, 840L, -1020320L, 3369171L))
+    assert(cells(pMix) === Seq(200L, 840L, -1356000L, 5024298L))
     val again = Clustering.onlineLdaPerplexity(sep.repartition(7, col("doc_id")),
       "doc_id", "text").head()
     assert(again.getLong(2) === pSep.getLong(2)) // exact ll across partitionings
